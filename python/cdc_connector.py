@@ -148,10 +148,10 @@ def spark_options(host, user, password, *, port=4001, table=None,
     if domain_mode not in ("single", "vector"):
         raise ValueError("domain_mode must be 'single' or 'vector', "
                          "got %r" % domain_mode)
-    # domain_mode='vector' composes with tables= (MultiVectorMicroBatchStream)
-    # and with schema_mode='normalized' (NormalizedCdcMicroBatchStream with
-    # vector delegates) since r11 — no extra validation needed here; vector
-    # bounds come as lists (or 'v:' strings), per-table via the composite
+    # domain_mode='vector' composes with tables= and with
+    # schema_mode='normalized' (CompositeCdcMicroBatchStream with vector
+    # delegates) — no extra validation needed here; vector bounds come as
+    # lists (or 'v:' strings), per-table via the composite
     # 'db.a=v:...;db.b=v:-' form
     if schema_mode not in ("uniform", "normalized"):
         raise ValueError("schema_mode must be 'uniform' or 'normalized', "

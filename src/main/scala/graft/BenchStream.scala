@@ -76,8 +76,8 @@ object BenchStream {
     // without paying the whole 15-min soak; the recorded per-round
     // capture always runs all sections). Names: cdc_sink,
     // curation_view, dedup_cluster_view, neardup_stream,
-    // semantic_dedup, bm25, hybrid (incl. mmr), rerank (incl.
-    // index_health).
+    // semantic_dedup, bm25, index_growth, hybrid (incl. mmr), rerank
+    // (incl. index_health).
     val onlySections = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
       .map(_.split(',').map(_.trim).toSet)
     def sectionOn(name: String): Boolean =
@@ -387,7 +387,7 @@ object BenchStream {
         .select(col("vec_id").cast("long"), col("embedding"))
         .as[(Long, Seq[Float])].collect()
       val eoff = evs.iterator.map(_._1).max + 1
-      val (cells, cbs, _) = graft.operators.Similarity.pqResArtifacts(
+      val (cells, cbs) = graft.operators.Similarity.pqResCodebooks(
         graft.Tables.embeddings(spark, sfDir)
           .select(col("vec_id"), col("embedding")))
       val vdir = s"$work/vecgrowth"

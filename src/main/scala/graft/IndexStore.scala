@@ -1,5 +1,7 @@
 package graft
 
+import graft.streaming.RenameSwap
+
 /** On-disk, build-once index artifacts keyed by corpus fingerprint.
   *
   * Production retrieval serves from PERSISTED index artifacts (postings
@@ -157,7 +159,7 @@ object IndexStore {
         // would otherwise accumulate orphaned .build-* directories, each
         // possibly holding a large half-written stage (ADVICE r15)
         try build(tmp.toString)
-        catch { case e: Throwable => deleteTree(tmp); throw e }
+        catch { case e: Throwable => RenameSwap.deleteRecursively(tmp); throw e }
         finally frames.set(frames.get.tail)
         val secs = (System.nanoTime() - t0) / 1e9
         val rec = buildRecord(kind, dir.getFileName.toString, corpusDir,
@@ -172,7 +174,7 @@ object IndexStore {
         catch {
           // another process published first — theirs is complete, use it
           case e: java.nio.file.FileSystemException =>
-            if (java.nio.file.Files.exists(marker)) deleteTree(tmp)
+            if (java.nio.file.Files.exists(marker)) RenameSwap.deleteRecursively(tmp)
             else throw e
         }
         appendJournal(rec)
@@ -293,7 +295,7 @@ object IndexStore {
       a.stale.contains(true) ||
         olderThanMs.exists(w => now - a.lastServedMs > w)
     }.map { a =>
-      deleteTree(baseDir.resolve(a.name))
+      RenameSwap.deleteRecursively(baseDir.resolve(a.name))
       a.name
     }
   }
@@ -304,19 +306,11 @@ object IndexStore {
     * the deleted names. */
   def wipeKinds(prefixes: Seq[String]): Seq[String] =
     list().filter(a => prefixes.exists(a.kind.startsWith))
-      .map { a => deleteTree(baseDir.resolve(a.name)); a.name }
+      .map { a => RenameSwap.deleteRecursively(baseDir.resolve(a.name)); a.name }
 
   /** Delete a build-scratch subtree (staging tables a builder writes
     * under its temp dir and discards before publish — the residual
     * fixed-point staging of the pqvec build). */
   def deleteSubtree(path: String): Unit =
-    deleteTree(java.nio.file.Paths.get(path))
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
+    RenameSwap.deleteRecursively(java.nio.file.Paths.get(path))
 }

@@ -71,15 +71,17 @@ object BinnedPercentile {
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[DataFrame, Seq[DataFrame]]())
 
-  /** Release the four pinned intermediates of one [[perGroup]]
-    * construction — the cache-lifecycle valve for long-lived sessions
-    * constructing many ad-hoc percentile frames (ADVICE r8). Call AFTER
+  /** Release the pinned intermediates of one [[perGroup]] construction
+    * (three, or four when the level-2 scan ran) — the cache-lifecycle
+    * valve for long-lived sessions constructing many ad-hoc percentile
+    * frames (ADVICE r8). Call AFTER
     * the result has materialized (collected/written) and will not be
     * re-executed: the result's plan reads two of the pinned frames, so
     * a later action on it would recompute the whole narrowing from raw
     * lineage (the documented doubling — which is also why declared
     * bench queries deliberately never release). Unpersists run in
-    * reverse dependency order (rankVals → hist2 → ranks → hist1), so
+    * reverse dependency order (rankVals → hist2 → ranks → hist1, hist2
+    * only when the level-2 scan ran), so
     * the CacheManager never re-caches a still-cached dependent of an
     * uncached parent — release itself runs zero Spark jobs. Returns the
     * number of frames released (0 if already released / not a perGroup
@@ -258,8 +260,9 @@ object BinnedPercentile {
     // + `rankVals`, but unpersisting the histogram scaffolding here
     // measurably DOUBLES the query (Spark re-cascades dependent cache
     // entries on uncache and the final action recomputes the narrowing
-    // from raw lineage). All four pinned frames are O(groups × buckets)
-    // / O(groups × ps) — bounded regardless of row count — and
+    // from raw lineage). The pinned frames (three, or four when the
+    // level-2 scan runs) are O(groups × buckets) / O(groups × ps) —
+    // bounded regardless of row count — and
     // MEMORY_AND_DISK entries are LRU-evictable, so they stay cached
     // for the session; a fresh construction re-pins fresh frames
     // (callers construct once per query, not per action). Long-lived

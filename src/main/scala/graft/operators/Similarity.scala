@@ -2482,6 +2482,26 @@ object Similarity extends QueryPack {
     * same class of driver hop as the codebook collect. */
   def pqResArtifacts(e: DataFrame): (Seq[(Long, Seq[Double], Seq[Long])],
       Seq[(Int, Long, Seq[Long])], DataFrame) = {
+    val (cells, cb, idx, _) = pqResBuild(e)
+    (cells, cb, idx)
+  }
+
+  /** [[pqResArtifacts]] for callers that need only the cell records and
+    * the codebooks (the streaming encoder's inputs, e.g.
+    * [[graft.streaming.VecIndexView]]): both frames the build persists
+    * are released before returning. */
+  def pqResCodebooks(e: DataFrame): (Seq[(Long, Seq[Double], Seq[Long])],
+      Seq[(Int, Long, Seq[Long])]) = {
+    val (cells, cb, idx, cmeans) = pqResBuild(e)
+    idx.unpersist(blocking = false)
+    cmeans.unpersist(blocking = false)
+    (cells, cb)
+  }
+
+  /** The residual-index build behind [[pqResArtifacts]]; also returns
+    * the persisted cell-means frame so a caller can release it. */
+  private def pqResBuild(e: DataFrame): (Seq[(Long, Seq[Double], Seq[Long])],
+      Seq[(Int, Long, Seq[Long])], DataFrame, DataFrame) = {
     val cents = ivfCentroids(e)
     val cellOf = ivfCellOf(e, cents)
     // PERSIST the build artifacts: the returned index frame is consumed
@@ -2505,7 +2525,7 @@ object Similarity extends QueryPack {
           r.getSeq[Number](r.fieldIndex("ctr")).map(_.doubleValue()).toSeq,
           r.getSeq[Long](r.fieldIndex("ctrm")).toSeq)
       }.toSeq
-    (cells, cb, idx)
+    (cells, cb, idx, cmeans)
   }
 
   /** The residual-era CELL RECORDS `(cell_id, ctr, ctrm)` under an

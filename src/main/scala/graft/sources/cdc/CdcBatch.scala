@@ -73,11 +73,7 @@ final class CdcBatch(
 
   /** Wire fields are always the full table schema (the server sends
     * whole rows; replay needs the GTID trio regardless of projection). */
-  private val fields: Seq[CdcField] = baseSchema.fields.toSeq.map { f =>
-    val t = if (f.metadata.contains("cdc.sqlType"))
-      f.metadata.getString("cdc.sqlType") else f.dataType.simpleString
-    CdcField(f.name, t)
-  }
+  private val fields: Seq[CdcField] = CdcField.fromSchema(baseSchema)
 
   /** Per-table start: plain `startingGtid` applies to every table; the
     * composite `db.a=0-1-5,db.b=-` form names each table's own position
@@ -101,17 +97,13 @@ final class CdcBatch(
   }
 
   /** Pushed `_table`-only conjuncts → plan-time table pruning (multi
-    * mode), exactly like [[MultiCdcMicroBatchStream]]. Recomputed per
-    * use: runtime filters arrive after construction. */
-  private val tagSchema = StructType(Seq(org.apache.spark.sql.types
-    .StructField(MultiCdc.TableColumn,
-      org.apache.spark.sql.types.StringType, nullable = false)))
+    * mode), exactly like [[CompositeCdcMicroBatchStream]]. Recomputed
+    * per use: runtime filters arrive after construction. */
   private def allFilters: Array[Filter] = pushed ++ runtime()
   private def tablePred: WirePred =
     CdcWireFilters.compileAll(
-      allFilters.filter(f =>
-        multi && f.references.forall(_ == MultiCdc.TableColumn)).toSeq,
-      tagSchema, typed = true)
+      allFilters.filter(f => multi && MultiCdc.tableOnly(f)).toSeq,
+      MultiCdc.TagSchema, typed = true)
   /** Static pushed-filter predicate — baked into the reader factory,
     * which Spark materializes at PLANNING time (supportsColumnar). */
   private val rowPred: WirePred = CdcWireFilters.compileAll(
@@ -126,11 +118,7 @@ final class CdcBatch(
     runtime().toSeq.filterNot(_.references.contains(MultiCdc.TableColumn)),
     baseSchema, opts.typed)
 
-  private def included(t: String): Boolean = {
-    val pred = tablePred
-    val row = Array(t); val noNull = Array(false)
-    pred == null || pred.eval(row, noNull)
-  }
+  private def included(t: String): Boolean = MultiCdc.admits(tablePred, t)
 
   /** Probe buffer cap: in GTID mode the drain loop keeps it near-empty;
     * in synthetic (GTID-less) mode it is a hard batch-size bound because
@@ -359,15 +347,5 @@ final class CdcBatch(
         if (required == schema) null
         else required.fields.map(f => schema.fieldIndex(f.name))
       new CdcPartitionReaderFactory(required, opts.typed, projection, rowPred)
-    } else {
-      val appendTable = required.fieldNames.contains(MultiCdc.TableColumn)
-      val emitBase = required.fields.exists(_.name != MultiCdc.TableColumn)
-      val baseRequired = {
-        val base = StructType(
-          required.fields.filterNot(_.name == MultiCdc.TableColumn))
-        if (base.fields.isEmpty) StructType(baseSchema.fields.take(1)) else base
-      }
-      new TaggedCdcReaderFactory(baseSchema, baseRequired, opts.typed,
-        appendTable, emitBase, rowPred)
-    }
+    } else new TaggedCdcReaderFactory(schema, required, opts.typed, rowPred)
 }

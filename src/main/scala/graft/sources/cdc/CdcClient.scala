@@ -68,6 +68,18 @@ case object CdcClosed extends CdcMessage
 
 final case class CdcField(name: String, sqlType: String)
 
+object CdcField {
+  /** The wire fields behind a Spark schema: each field's declared SQL
+    * type rides in its `cdc.sqlType` metadata (schema inference puts it
+    * there); a field without it falls back to its Spark type name. */
+  def fromSchema(schema: org.apache.spark.sql.types.StructType): Seq[CdcField] =
+    schema.fields.toSeq.map { f =>
+      val t = if (f.metadata.contains("cdc.sqlType"))
+        f.metadata.getString("cdc.sqlType") else f.dataType.simpleString
+      CdcField(f.name, t)
+    }
+}
+
 object CdcClient {
   /** Connector identity sent at registration. Plays the role of the
     * reference's `CDC_CONNECTOR_VERSION` UUID (cdc_connector.cpp:37,45)

@@ -33,6 +33,10 @@ private[sources] object WirePred {
   final val LT = -2; final val LE = -1; final val EQ = 0
   final val GE = 1; final val GT = 2
 
+  /** AND of two predicates where null means "none". */
+  def and(a: WirePred, b: WirePred): WirePred =
+    if (a == null) b else if (b == null) a else AndP(a, b)
+
   private def cmpHolds(c: Int, op: Int): Boolean = op match {
     case LT => c < 0
     case LE => c <= 0

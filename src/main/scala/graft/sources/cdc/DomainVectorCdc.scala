@@ -1,7 +1,7 @@
 package graft.sources.cdc
 
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
@@ -36,46 +36,12 @@ import org.apache.spark.sql.types.StructType
 class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
     checkpointLocation: String, required: StructType = null,
     pushed: Array[Filter] = Array.empty)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow
-    with ReportsSourceMetrics with CdcPushdownSupport {
+    extends CdcTableStream(schema, opts, required, pushed) {
 
   require(opts.allTables.size == 1,
     "maxscale-cdc: DomainVectorMicroBatchStream is the single-table " +
-      "delegate; 'tables=' composes via MultiVectorMicroBatchStream, " +
-      "schemaMode=normalized via NormalizedCdcMicroBatchStream")
-
-  /** Wire fields are always the full table schema (replay needs the GTID
-    * trio regardless of projection). */
-  private val fields: Seq[CdcField] =
-    schema.fields.toSeq.map { f =>
-      val t = if (f.metadata.contains("cdc.sqlType"))
-        f.metadata.getString("cdc.sqlType") else f.dataType.simpleString
-      CdcField(f.name, t)
-    }
-
-  private val outSchema: StructType =
-    if (required == null) schema else required
-  private val projection: Array[Int] =
-    if (outSchema == schema) null
-    else outSchema.fields.map(f => schema.fieldIndex(f.name))
-
-  private val wirePred: WirePred =
-    CdcWireFilters.compileAll(pushed.toSeq, schema, opts.typed)
-
-  @volatile private var runtimePred: WirePred = null
-  @volatile private var runtimeMask: Array[Boolean] = null
-  override def pushRuntime(
-      filters: Seq[Filter], referenced: Option[Set[String]]): Unit = {
-    CdcPushdownProbe.lastRuntimeFilters = filters.map(_.toString)
-    CdcPushdownProbe.lastRuntimeReferenced = referenced
-    runtimePred = CdcWireFilters.compileAll(filters, schema, opts.typed)
-    runtimeMask = referenced match {
-      case Some(refs) if !outSchema.fields.forall(f => refs.contains(f.name)) =>
-        outSchema.fields.map(f => refs.contains(f.name))
-      case _ => null
-    }
-  }
+      "delegate; 'tables=' and schemaMode=normalized compose via " +
+      "CompositeCdcMicroBatchStream")
 
   /** `startingGtid` in vector mode: absent (stream start) or the
     * explicit `v:d-s-q,...` form — a bare triple is ambiguous about the
@@ -101,27 +67,13 @@ class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
         .filterNot(g => committed.of(g.domain).isDefined))
   }
 
-  @volatile private var tailer: CdcTailer = _
-  private def ensureTailer(): CdcTailer = synchronized {
-    if (tailer == null) {
-      tailer = new CdcTailer(opts.host, opts.port, opts.user, opts.password,
-        opts.table, fields, resumeAfter = None, opts.timeoutMs,
-        maxBuffered = math.max(2 * opts.maxEventsPerBatch, 10000),
-        // normalized delegates absorb mid-stream DDL (schema-free payload
-        // rows) exactly like the single-triple delegate does
-        tolerateReSchema = opts.normalized,
-        domainVector = true, resumeVector = resumeHint.entries)
-      tailer.start()
-    }
-    tailer
-  }
-
-  /** Composite `_table` pruning support: drop the tailer (connection,
-    * buffer) while this table is excluded; the next included batch
-    * re-creates it from the committed resume vector. */
-  private[cdc] def idle(): Unit = synchronized {
-    if (tailer != null) { tailer.shutdown(); tailer = null }
-  }
+  override protected def newTailer(): CdcTailer =
+    new CdcTailer(opts.host, opts.port, opts.user, opts.password,
+      opts.table, fields, resumeAfter = None, opts.timeoutMs, tailerBuffer,
+      // normalized delegates absorb mid-stream DDL (schema-free payload
+      // rows) exactly like the single-triple delegate does
+      tolerateReSchema = opts.normalized,
+      domainVector = true, resumeVector = resumeHint.entries)
 
   override def initialOffset(): Offset = startVector
 
@@ -142,9 +94,6 @@ class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
   override def deserializeOffset(json: String): Offset =
     DomainVectorOffset.fromJson(json)
 
-  override def getDefaultReadLimit: ReadLimit =
-    ReadLimit.maxRows(opts.maxEventsPerBatch)
-
   /** End of the last batch this stream planned (offsets advance ahead of
     * commits, exactly like the single-triple stream). */
   @volatile private var lastPlannedEnd: DomainVectorOffset = null
@@ -153,10 +102,6 @@ class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
     val startVec = start.asInstanceOf[DomainVectorOffset]
     val t = ensureTailer()
     t.checkFatal()
-    val max = limit match {
-      case r: ReadMaxRows => math.min(r.maxRows(), Int.MaxValue).toInt
-      case _ => opts.maxEventsPerBatch
-    }
     // floor at the furthest of Spark's own start and our planned end —
     // after a crash between Spark's commit log and our watermark file
     // the local state can lag Spark's durable position
@@ -171,13 +116,11 @@ class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
       if (availableNowTarget.isEmpty) return after
       availableNowTarget
     } else Nil
-    val end = DomainVectorOffset(t.cappedEndVector(after.entries, max, clamp))
+    val end = DomainVectorOffset(
+      t.cappedEndVector(after.entries, rowBudget(limit), clamp))
     lastPlannedEnd = end
     end
   }
-
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[DomainVectorOffset]
@@ -210,16 +153,6 @@ class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val pred = (wirePred, runtimePred) match {
-      case (null, r) => r
-      case (s, null) => s
-      case (s, r)    => WirePred.AndP(s, r)
-    }
-    new CdcPartitionReaderFactory(outSchema, opts.typed, projection, pred,
-      runtimeMask)
-  }
-
   /** Monotone vector commit: no domain's watermark ever regresses (the
     * file write enforces the same partial order). */
   override def commit(end: Offset): Unit = {
@@ -231,18 +164,10 @@ class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
     }
   }
 
-  override def stop(): Unit = synchronized {
-    if (tailer != null) tailer.shutdown()
-  }
-
   override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    val t = tailer
-    m.put("bufferedEvents", if (t == null) "0" else t.bufferedCount.toString)
+    val m = baseMetrics()
     m.put("committedGtidVector", resumeHint.json())
     m.put("domains", resumeHint.entries.size.toString)
-    m.put("pushdownFilterActive", (runtimePred != null || wirePred != null).toString)
-    m.put("decodeSkipActive", (runtimeMask != null).toString)
     m
   }
 }
@@ -280,8 +205,8 @@ object MultiVectorOffset {
     * `db.a=v:...;db.b=v:-` form (entries naming unsubscribed tables are
     * rejected — a typo'd entry would silently fall back to stream
     * start, the dangerous direction; an absent entry is an EXPLICIT
-    * stream start). Shared by the vector × `tables=` and vector ×
-    * `schemaMode=normalized` composites. */
+    * stream start). Used by [[CompositeCdcMicroBatchStream]] in vector
+    * mode. */
   private[cdc] def startFor(startingGtid: Option[String],
       tables: Seq[String], t: String): Option[String] = startingGtid match {
     case None => None
@@ -293,161 +218,5 @@ object MultiVectorOffset {
         s"maxscale-cdc: composite vector startingGtid names unsubscribed " +
           s"tables [${unknown.mkString(",")}] (subscribed: ${tables.mkString(",")})")
       mv.entries.collectFirst { case (`t`, v) => v.json() }
-  }
-}
-
-/** `domainMode=vector` × `tables=`: a multi-master deployment's SHARD
-  * SET — several same-schema tables, each tailing an interleaved
-  * multi-domain changelog — in one streaming query (r10 verdict item 4;
-  * previously refused). One [[DomainVectorMicroBatchStream]] delegate
-  * per table behind a [[MultiVectorOffset]], mirroring
-  * [[MultiCdcMicroBatchStream]]'s composition exactly: per-table
-  * checkpoint subdirectories for the committed-vector watermarks,
-  * even row-budget split, `_table`-conjunct plan-time table pruning
-  * (excluded tables freeze their vector and idle their tailer), tagged
-  * partitions + the shared [[TaggedCdcReaderFactory]] data plane.
-  * Exactly-once composes per table: each delegate's batch is a vector
-  * range under its own committed floor. */
-class MultiVectorMicroBatchStream(
-    schema: StructType, required: StructType, opts: CdcOptions,
-    checkpointLocation: String,
-    pushed: Array[Filter] = Array.empty)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics
-    with CdcPushdownSupport {
-
-  require(schema.fields.lastOption.exists(_.name == MultiCdc.TableColumn),
-    s"multi-table schema must end in the ${MultiCdc.TableColumn} column")
-  require(!opts.normalized,
-    "maxscale-cdc: schemaMode=normalized composes with domainMode=vector " +
-      "via NormalizedCdcMicroBatchStream, not this uniform composite")
-  private val baseSchema = StructType(schema.fields.dropRight(1))
-  private val appendTable: Boolean =
-    required.fieldNames.contains(MultiCdc.TableColumn)
-  private val emitBase: Boolean =
-    required.fields.exists(_.name != MultiCdc.TableColumn)
-  private val baseRequired: StructType = {
-    val base = StructType(
-      required.fields.filterNot(_.name == MultiCdc.TableColumn))
-    if (base.fields.isEmpty) StructType(baseSchema.fields.take(1)) else base
-  }
-  private val tables = opts.allTables
-
-  private val tagSchema = StructType(Seq(org.apache.spark.sql.types
-    .StructField(MultiCdc.TableColumn,
-      org.apache.spark.sql.types.StringType, nullable = false)))
-  private val (tableConjuncts, rowConjuncts) =
-    pushed.partition(_.references.forall(_ == MultiCdc.TableColumn))
-  private val tablePred: WirePred =
-    CdcWireFilters.compileAll(tableConjuncts.toSeq, tagSchema, typed = true)
-  private val rowPred: WirePred =
-    CdcWireFilters.compileAll(rowConjuncts.toSeq, baseSchema, opts.typed)
-
-  @volatile private var runtimeTablePred: WirePred = null
-  @volatile private var runtimeRowPred: WirePred = null
-  @volatile private var runtimeMask: Array[Boolean] = null
-  override def pushRuntime(
-      filters: Seq[Filter], referenced: Option[Set[String]]): Unit = {
-    CdcPushdownProbe.lastRuntimeFilters = filters.map(_.toString)
-    CdcPushdownProbe.lastRuntimeReferenced = referenced
-    val (tf, rf) =
-      filters.partition(_.references.forall(_ == MultiCdc.TableColumn))
-    runtimeTablePred = CdcWireFilters.compileAll(tf, tagSchema, typed = true)
-    runtimeRowPred = CdcWireFilters.compileAll(
-      rf.filterNot(_.references.contains(MultiCdc.TableColumn)),
-      baseSchema, opts.typed)
-    runtimeMask = referenced match {
-      case Some(refs) if !baseRequired.fields.forall(f => refs.contains(f.name)) =>
-        baseRequired.fields.map(f => refs.contains(f.name))
-      case _ => null
-    }
-  }
-
-  private def included(t: String): Boolean = {
-    val row = Array(t); val noNull = Array(false)
-    (tablePred == null || tablePred.eval(row, noNull)) &&
-      (runtimeTablePred == null || runtimeTablePred.eval(row, noNull))
-  }
-
-  private def subCheckpoint(t: String): String =
-    checkpointLocation + "/table-" + java.net.URLEncoder.encode(t, "UTF-8")
-
-  private val streams: Seq[(String, DomainVectorMicroBatchStream)] =
-    tables.map { t =>
-      t -> new DomainVectorMicroBatchStream(
-        baseSchema, opts.copy(table = t, tables = Seq.empty,
-          startingGtid = MultiVectorOffset.startFor(opts.startingGtid, tables, t)),
-        subCheckpoint(t), baseRequired)
-    }
-
-  private def vectorOf(o: Offset, t: String): DomainVectorOffset = o match {
-    case m: MultiVectorOffset  => m.of(t)
-    case v: DomainVectorOffset => v // degenerate: never produced here
-    case other => throw new IllegalArgumentException(
-      s"unexpected offset type ${other.getClass}")
-  }
-
-  override def initialOffset(): Offset =
-    MultiVectorOffset(streams.map { case (t, s) =>
-      t -> s.initialOffset().asInstanceOf[DomainVectorOffset]
-    })
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    streams.foreach(_._2.prepareForTriggerAvailableNow())
-
-  override def deserializeOffset(json: String): Offset =
-    MultiVectorOffset.fromJson(json)
-
-  override def getDefaultReadLimit: ReadLimit =
-    ReadLimit.maxRows(opts.maxEventsPerBatch)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val max = limit match {
-      case r: ReadMaxRows => math.min(r.maxRows(), Int.MaxValue).toInt
-      case _ => opts.maxEventsPerBatch
-    }
-    val nIncluded = math.max(1, tables.count(included))
-    val perTable = math.max(1, max / nIncluded)
-    MultiVectorOffset(streams.map { case (t, s) =>
-      t -> (if (!included(t)) { s.idle(); vectorOf(start, t) }
-            else s.latestOffset(vectorOf(start, t), ReadLimit.maxRows(perTable))
-              .asInstanceOf[DomainVectorOffset])
-    })
-  }
-
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead of this method")
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    streams.flatMap { case (t, s) =>
-      if (!included(t)) Array.empty[InputPartition]
-      else s.planInputPartitions(vectorOf(start, t), vectorOf(end, t))
-        .map(p => TaggedCdcPartition(p, t): InputPartition)
-    }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val pred = (rowPred, runtimeRowPred) match {
-      case (null, r) => r
-      case (s, null) => s
-      case (s, r)    => WirePred.AndP(s, r)
-    }
-    new TaggedCdcReaderFactory(
-      baseSchema, baseRequired, opts.typed, appendTable, emitBase, pred,
-      runtimeMask)
-  }
-
-  override def commit(end: Offset): Unit =
-    streams.foreach { case (t, s) => s.commit(vectorOf(end, t)) }
-
-  override def stop(): Unit = streams.foreach(_._2.stop())
-
-  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    streams.foreach { case (t, s) =>
-      m.put(s"$t.included", included(t).toString)
-      s.metrics(java.util.Optional.empty[Offset]()).forEach((k, v) =>
-        m.put(s"$t.$k", v))
-    }
-    m
   }
 }

@@ -35,7 +35,8 @@ final case class CdcOptions(
     endGtidObserved: Boolean = false,
     // schemaMode=normalized: heterogeneous tables fan in to one
     // normalized changelog (GTID/event metadata + `payload` JSON +
-    // `_table`) instead of requiring one shared schema — see
+    // `_table`) instead of requiring one shared schema — the
+    // [[NormalizedPlane]] of [[CompositeCdcMicroBatchStream]]; see
     // [[NormalizedCdc]]
     normalized: Boolean = false,
     // minimum GTID sequence span per fabricated-cut catch-up connection:
@@ -44,12 +45,15 @@ final case class CdcOptions(
     catchupSpanPerConnection: Long = GtidRangeCuts.DefaultSpanPerConnection,
     // domainMode=vector: per-domain watermark offsets (gtid_slave_pos
     // semantics) — the INTERLEAVED multi-domain changelog shape; see
-    // [[DomainVectorOffset]] / [[DomainVectorMicroBatchStream]]
+    // [[DomainVectorOffset]] / [[DomainVectorMicroBatchStream]], and
+    // [[MultiVectorOffset]] when [[CompositeCdcMicroBatchStream]]
+    // composes several tables
     domainVector: Boolean = false) {
   def timeoutMs: Int = timeoutSeconds * 1000
 
   /** All subscribed tables: the `tables` option when present (multi-table
-    * mode, one stream + composite offset), else the single `table`. */
+    * mode, one [[CompositeCdcMicroBatchStream]] + composite offset), else
+    * the single `table`. */
   def allTables: Seq[String] = if (tables.nonEmpty) tables else Seq(table)
 
   /** Start position for one table. `startingGtid` is a plain GTID (same
@@ -314,9 +318,6 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
       private val multi = opts.allTables.size > 1
       private val baseSchema =
         if (multi) StructType(schema.fields.dropRight(1)) else schema
-      private val tagSchema = StructType(Seq(org.apache.spark.sql.types
-        .StructField(MultiCdc.TableColumn,
-          org.apache.spark.sql.types.StringType, nullable = false)))
 
       /** A conjunct is pushable when it compiles against the wire row —
         * or, in multi-table mode, when it references ONLY `_table` and
@@ -325,8 +326,8 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
         * stay with Spark. */
       private def pushable(f: Filter): Boolean =
         if (multi && f.references.contains(MultiCdc.TableColumn))
-          f.references.forall(_ == MultiCdc.TableColumn) &&
-            CdcWireFilters.compile(f, tagSchema, typed = true).isDefined
+          MultiCdc.tableOnly(f) &&
+            CdcWireFilters.compile(f, MultiCdc.TagSchema, typed = true).isDefined
         else CdcWireFilters.compile(f, baseSchema, opts.typed).isDefined
 
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
@@ -437,11 +438,8 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
           require(opts.endGtid.isEmpty,
             "maxscale-cdc: endGtid is a batch-read option; bound a stream " +
               "with Trigger.AvailableNow instead")
-          if (multi && opts.domainVector)
-            new MultiVectorMicroBatchStream(schema, required, opts,
-              checkpointLocation, pushed)
-          else if (multi)
-            new MultiCdcMicroBatchStream(schema, required, opts,
+          if (multi)
+            new CompositeCdcMicroBatchStream(schema, required, opts,
               checkpointLocation, pushed)
           else if (opts.domainVector)
             new DomainVectorMicroBatchStream(schema, opts,
@@ -469,15 +467,12 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
         with SupportsPushDownFilters {
       private var required: StructType = schema
       private var pushed: Array[Filter] = Array.empty
-      private val tagSchema = StructType(Seq(org.apache.spark.sql.types
-        .StructField(MultiCdc.TableColumn,
-          org.apache.spark.sql.types.StringType, nullable = false)))
       private val metaSchema =
         StructType(schema.fields.filter(f => NormalizedCdc.Meta.contains(f.name)))
 
       private def pushable(f: Filter): Boolean =
-        if (f.references.forall(_ == MultiCdc.TableColumn))
-          CdcWireFilters.compile(f, tagSchema, typed = true).isDefined
+        if (MultiCdc.tableOnly(f))
+          CdcWireFilters.compile(f, MultiCdc.TagSchema, typed = true).isDefined
         else f.references.forall(NormalizedCdc.Meta.contains) &&
           CdcWireFilters.compile(f, metaSchema, opts.typed).isDefined
 
@@ -523,7 +518,7 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
           require(opts.endGtid.isEmpty,
             "maxscale-cdc: endGtid is a batch-read option; bound a stream " +
               "with Trigger.AvailableNow instead")
-          new NormalizedCdcMicroBatchStream(schema, required, opts,
+          new CompositeCdcMicroBatchStream(schema, required, opts,
             checkpointLocation, pushed)
         }
         // one-shot normalized pull — the batch twin of the normalized
@@ -534,37 +529,41 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
     }
 }
 
-/** Micro-batch planner over the driver-side [[CdcTailer]].
-  *
-  * Offsets are GTIDs (SURVEY.md §3.4): `initialOffset` is the
-  * `startingGtid` option (reference `connect(table, gtid)` semantics).
-  *
-  * Recovery contract: after a restart Spark may re-plan the last
-  * UNcommitted batch with its logged (start, end] range, so the tailer
-  * must resume from the last *committed* position — never later. That
-  * position is persisted under the checkpoint dir on every `commit()`
-  * (written after Spark's own commit log, so a crash between the two only
-  * ever replays extra events, which batch GTID ranges then exclude —
-  * the safe direction). The server replays from the requested GTID and
-  * the tailer's inclusive-skip dedupes, giving each batch exactly its
-  * range (SURVEY.md §7 hard-part 2).
-  */
-class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
-    checkpointLocation: String, required: StructType = null,
-    pushed: Array[Filter] = Array.empty)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics
-    with CdcPushdownSupport {
+/** What every CDC micro-batch stream shares, composite or single-table:
+  * the DSv2 streaming mix-ins, admission control over
+  * `maxEventsPerBatch`, and the no-arg `latestOffset` Spark never calls
+  * on a [[SupportsAdmissionControl]] source. */
+private[cdc] abstract class CdcStreamBase(opts: CdcOptions) extends MicroBatchStream
+    with SupportsAdmissionControl with SupportsTriggerAvailableNow
+    with ReportsSourceMetrics with CdcPushdownSupport {
+
+  override def getDefaultReadLimit: ReadLimit =
+    ReadLimit.maxRows(opts.maxEventsPerBatch)
+
+  /** The row budget `limit` grants one batch. */
+  protected def rowBudget(limit: ReadLimit): Int = limit match {
+    case r: ReadMaxRows => math.min(r.maxRows(), Int.MaxValue).toInt
+    case _ => opts.maxEventsPerBatch
+  }
+
+  override def latestOffset(): Offset = throw new IllegalStateException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
+}
+
+/** Scaffolding of the two single-table streams ([[CdcMicroBatchStream]]
+  * over one GTID, [[DomainVectorMicroBatchStream]] over a domain
+  * vector): wire fields, column pruning, the pushed-filter predicate,
+  * runtime pushdown, the driver-side tailer's lifecycle and the reader
+  * factory. Offsets, tailer calls and partition planning stay in each
+  * leaf. */
+private[cdc] abstract class CdcTableStream(schema: StructType, opts: CdcOptions,
+    required: StructType, pushed: Array[Filter])
+    extends CdcStreamBase(opts) {
 
   /** Wire fields are ALWAYS the full table schema: the server sends whole
     * rows, and the tailer/replay readers extract GTIDs by position in
     * this list regardless of what the query projects. */
-  private val fields: Seq[CdcField] =
-    schema.fields.toSeq.map { f =>
-      val t = if (f.metadata.contains("cdc.sqlType"))
-        f.metadata.getString("cdc.sqlType") else f.dataType.simpleString
-      CdcField(f.name, t)
-    }
+  protected val fields: Seq[CdcField] = CdcField.fromSchema(schema)
 
   /** Output schema after column pruning (null `required` = no pruning). */
   private val outSchema: StructType =
@@ -602,6 +601,71 @@ class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
     }
   }
 
+  @volatile protected var tailer: CdcTailer = _
+  /** A new (not yet started) tailer resuming at the leaf's committed
+    * position. */
+  protected def newTailer(): CdcTailer
+  /** Driver-side buffer cap of the tailer. */
+  protected def tailerBuffer: Int = math.max(2 * opts.maxEventsPerBatch, 10000)
+
+  protected def ensureTailer(): CdcTailer = synchronized {
+    if (tailer == null) {
+      tailer = newTailer()
+      tailer.start()
+    }
+    tailer
+  }
+
+  /** Shut the tailer down (idempotent, recreatable): the composite
+    * stream idles a delegate when `_table` pruning excludes it, so an
+    * excluded table holds NO connection from the next batch on; a later
+    * filter change simply recreates the tailer at the resume point. */
+  private[cdc] def idle(): Unit = synchronized {
+    if (tailer != null) { tailer.shutdown(); tailer = null }
+  }
+
+  override def stop(): Unit = synchronized {
+    if (tailer != null) tailer.shutdown()
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    // static (ScanBuilder) and runtime (optimizer rule) predicates are
+    // both conservative over-approximations of the same query filters —
+    // AND is correct and de-duplicates nothing worse than a re-check
+    new CdcPartitionReaderFactory(outSchema, opts.typed, projection,
+      WirePred.and(wirePred, runtimePred), runtimeMask)
+
+  /** The metrics every leaf reports; each adds its position keys. */
+  protected def baseMetrics(): java.util.HashMap[String, String] = {
+    val m = new java.util.HashMap[String, String]()
+    val t = tailer
+    m.put("bufferedEvents", if (t == null) "0" else t.bufferedCount.toString)
+    m.put("pushdownFilterActive", (runtimePred != null || wirePred != null).toString)
+    m.put("decodeSkipActive", (runtimeMask != null).toString)
+    m
+  }
+}
+
+/** Micro-batch planner over the driver-side [[CdcTailer]].
+  *
+  * Offsets are GTIDs (SURVEY.md §3.4): `initialOffset` is the
+  * `startingGtid` option (reference `connect(table, gtid)` semantics).
+  *
+  * Recovery contract: after a restart Spark may re-plan the last
+  * UNcommitted batch with its logged (start, end] range, so the tailer
+  * must resume from the last *committed* position — never later. That
+  * position is persisted under the checkpoint dir on every `commit()`
+  * (written after Spark's own commit log, so a crash between the two only
+  * ever replays extra events, which batch GTID ranges then exclude —
+  * the safe direction). The server replays from the requested GTID and
+  * the tailer's inclusive-skip dedupes, giving each batch exactly its
+  * range (SURVEY.md §7 hard-part 2).
+  */
+class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
+    checkpointLocation: String, required: StructType = null,
+    pushed: Array[Filter] = Array.empty)
+    extends CdcTableStream(schema, opts, required, pushed) {
+
   private val startGtid: Option[Gtid] = opts.startFor(opts.table)
   /** Last committed position (checkpoint-persisted) — the tailer's resume
     * point. Always >= startingGtid, never past an uncommitted batch. */
@@ -610,28 +674,13 @@ class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
     (startGtid.toSeq ++ committed.toSeq)
       .reduceOption((a: Gtid, b: Gtid) => if (a >= b) a else b)
   }
-  @volatile private var tailer: CdcTailer = _
 
-  private def ensureTailer(): CdcTailer = synchronized {
-    if (tailer == null) {
-      tailer = new CdcTailer(opts.host, opts.port, opts.user, opts.password,
-        opts.table, fields, resumeHint, opts.timeoutMs,
-        maxBuffered = math.max(2 * opts.maxEventsPerBatch, 10000),
-        // normalized delegates absorb mid-stream DDL (schema-free payload
-        // rows); uniform mode keeps the documented fail-and-restart
-        tolerateReSchema = opts.normalized)
-      tailer.start()
-    }
-    tailer
-  }
-
-  /** Shut the tailer down (idempotent, recreatable): multi-table mode
-    * idles a delegate when runtime `_table` pruning excludes it, so an
-    * excluded table holds NO connection from the next batch on; a later
-    * filter change simply recreates the tailer at the resume hint. */
-  private[cdc] def idle(): Unit = synchronized {
-    if (tailer != null) { tailer.shutdown(); tailer = null }
-  }
+  override protected def newTailer(): CdcTailer =
+    new CdcTailer(opts.host, opts.port, opts.user, opts.password,
+      opts.table, fields, resumeHint, opts.timeoutMs, tailerBuffer,
+      // normalized delegates absorb mid-stream DDL (schema-free payload
+      // rows); uniform mode keeps the documented fail-and-restart
+      tolerateReSchema = opts.normalized)
 
   override def initialOffset(): Offset = GtidOffset(startGtid)
 
@@ -663,8 +712,6 @@ class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
     * stream at one batch per commit round-trip). */
   @volatile private var lastPlannedEnd: Option[Gtid] = None
 
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(opts.maxEventsPerBatch)
-
   /** Admission-controlled offset advance. The planned end is floored at
     * Spark's OWN start offset for the next batch: after a crash between
     * Spark's commit-log write and our committed-GTID file write, the local
@@ -676,13 +723,9 @@ class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
     val startG = start.asInstanceOf[GtidOffset].gtid
     val t = ensureTailer()
     t.checkFatal()
-    val max = limit match {
-      case r: ReadMaxRows => math.min(r.maxRows(), Int.MaxValue).toInt
-      case _ => opts.maxEventsPerBatch
-    }
     val after = (resumeHint.toSeq ++ lastPlannedEnd.toSeq ++ startG.toSeq)
       .reduceOption((a: Gtid, b: Gtid) => if (a >= b) a else b)
-    val capped = t.cappedEnd(after, max).orElse(after)
+    val capped = t.cappedEnd(after, rowBudget(limit)).orElse(after)
     // AvailableNow: never plan past the anchored target; an
     // initially-empty changelog (target None after prepare) plans
     // NOTHING — the offset stays at the resume point and the query
@@ -696,9 +739,6 @@ class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
     lastPlannedEnd = end
     GtidOffset(end)
   }
-
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GtidOffset].gtid
@@ -734,19 +774,6 @@ class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // static (ScanBuilder) and runtime (optimizer rule) predicates are
-    // both conservative over-approximations of the same query filters —
-    // AND is correct and de-duplicates nothing worse than a re-check
-    val pred = (wirePred, runtimePred) match {
-      case (null, r) => r
-      case (s, null) => s
-      case (s, r)    => WirePred.AndP(s, r)
-    }
-    new CdcPartitionReaderFactory(outSchema, opts.typed, projection, pred,
-      runtimeMask)
-  }
-
   /** Monotone commit: both the in-memory resume hint and the durable
     * watermark file only ever advance. A stale end offset (re-delivered
     * after restart, or a backwards batch from a planner race) must not
@@ -761,21 +788,13 @@ class CdcMicroBatchStream(schema: StructType, opts: CdcOptions,
     }
   }
 
-  override def stop(): Unit = synchronized {
-    if (tailer != null) tailer.shutdown()
-  }
-
   /** Driver-side source metrics, surfaced per micro-batch in
     * StreamingQueryProgress.sources[i].metrics — the operational signals
     * a changelog consumer actually watches: backlog depth, the committed
     * resume position, and whether runtime pushdown is engaged. */
   override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    val t = tailer
-    m.put("bufferedEvents", if (t == null) "0" else t.bufferedCount.toString)
+    val m = baseMetrics()
     m.put("committedGtid", resumeHint.map(_.toString).getOrElse("-"))
-    m.put("pushdownFilterActive", (runtimePred != null || wirePred != null).toString)
-    m.put("decodeSkipActive", (runtimeMask != null).toString)
     availableNowTarget.foreach(g => m.put("availableNowTarget", g.toString))
     m
   }
@@ -812,9 +831,8 @@ class CdcPartitionReaderFactory(schema: StructType, typed: Boolean,
       case RuntimeFilteredCdcPartition(inner, rt) =>
         // runtime filters ride the partition (see the case class doc);
         // AND them into this factory's static predicate for the reader
-        val combined = if (pred == null) rt else WirePred.AndP(pred, rt)
-        new CdcPartitionReaderFactory(schema, typed, projection, combined, mask)
-          .createReader(inner)
+        new CdcPartitionReaderFactory(schema, typed, projection,
+          WirePred.and(pred, rt), mask).createReader(inner)
       case rp: CdcReplayPartition =>
         new CdcReplayReader(rp, dts, typed, projection, pred, mask)
       case p: CdcInputPartition => new PartitionReader[InternalRow] {

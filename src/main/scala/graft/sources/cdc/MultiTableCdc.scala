@@ -2,9 +2,10 @@ package graft.sources.cdc
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.sources.Filter
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Multi-table mode (`tables=db.a,db.b`): several same-schema tables —
@@ -20,6 +21,19 @@ import org.apache.spark.unsafe.types.UTF8String
 object MultiCdc {
   /** Name of the appended provenance column in multi-table mode. */
   val TableColumn = "_table"
+
+  /** The one-column schema `_table`-only conjuncts compile against. */
+  private[cdc] val TagSchema: StructType =
+    StructType(Seq(StructField(TableColumn, StringType, nullable = false)))
+
+  /** A conjunct over `_table` alone: it prunes whole tables at plan
+    * time instead of filtering rows. */
+  private[cdc] def tableOnly(f: Filter): Boolean =
+    f.references.forall(_ == TableColumn)
+
+  /** Whether a compiled `_table` predicate (null = none) admits `t`. */
+  private[cdc] def admits(pred: WirePred, t: String): Boolean =
+    pred == null || pred.eval(Array(t), Array(false))
 
   /** Multi-table mode exists for same-schema shards — fail loudly at
     * plan time (not row-decode time) when a table's wire schema
@@ -84,114 +98,107 @@ object MultiGtidOffset {
     })
 }
 
-/** One [[CdcMicroBatchStream]] per table, composed behind a composite
-  * offset. Each delegate keeps its own tailer, committed-GTID watermark
-  * (under a per-table subdirectory of the checkpoint) and admission
-  * control; the row budget of each batch is split evenly across tables.
-  * Partitions are tagged with their table so the reader can append the
-  * `_table` column — the data plane is otherwise exactly the single-table
-  * executor-replay path.
+/** The one composite micro-batch stream: every multi-table mode —
+  * `tables=`, `schemaMode=normalized`, and either of them ×
+  * `domainMode=vector` — is one single-table stream per table behind a
+  * per-table offset, because the reference client binds one table per
+  * connection (cdc_connector.h:52-58).
+  *
+  * Each delegate keeps its own tailer, committed-position watermark
+  * (under `checkpoint/table-<urlencoded>`) and admission control; the
+  * row budget of each batch is split evenly across the included tables.
+  * Partitions are tagged with their table ([[TaggedCdcPartition]]).
+  *
+  * Two things vary, both selected by existing options:
+  *   - the offset shape (`domainMode`): [[MultiGtidOffset]] over
+  *     [[CdcMicroBatchStream]] delegates, or [[MultiVectorOffset]] over
+  *     [[DomainVectorMicroBatchStream]] delegates;
+  *   - the data plane (`schemaMode`): [[UniformPlane]] or
+  *     [[NormalizedPlane]].
+  *
+  * Pushed `_table` conjuncts become PLAN-TIME table pruning: an
+  * excluded table gets no tailer, no connection, no partitions, and a
+  * frozen offset entry (the safe direction: dropping the filter later
+  * replays from the freeze point, duplicating rather than losing).
+  * Exactly-once composes per table: each delegate's batch is a range
+  * under its own committed floor.
   */
-class MultiCdcMicroBatchStream(
+class CompositeCdcMicroBatchStream(
     schema: StructType, required: StructType, opts: CdcOptions,
-    checkpointLocation: String,
-    pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics
-    with CdcPushdownSupport {
+    checkpointLocation: String, pushed: Array[Filter] = Array.empty)
+    extends CdcStreamBase(opts) {
 
-  require(schema.fields.lastOption.exists(_.name == MultiCdc.TableColumn),
-    s"multi-table schema must end in the ${MultiCdc.TableColumn} column")
-  private val baseSchema = StructType(schema.fields.dropRight(1))
-  /** Whether the (possibly pruned) output still carries `_table`. */
-  private val appendTable: Boolean =
-    required.fieldNames.contains(MultiCdc.TableColumn)
-  /** Whether any base column survived the prune; when false (a
-    * `_table`-only projection) the reader emits the tag alone — the
-    * inner reader still runs, but only to frame rows / drive replay. */
-  private val emitBase: Boolean =
-    required.fields.exists(_.name != MultiCdc.TableColumn)
-  /** The pruned base-row schema each delegate decodes; a `_table`-only
-    * projection still decodes one base column for row framing (its
-    * values are discarded — see [[TaggedCdcReaderFactory]]). */
-  private val baseRequired: StructType = {
-    val base = StructType(
-      required.fields.filterNot(_.name == MultiCdc.TableColumn))
-    if (base.fields.isEmpty) StructType(baseSchema.fields.take(1)) else base
-  }
   private val tables = opts.allTables
+  private val vector = opts.domainVector
+  private val plane: CompositePlane =
+    if (opts.normalized) new NormalizedPlane(schema, required, opts)
+    else new UniformPlane(schema, required, opts.typed)
 
-  /** Pushed `_table` conjuncts become PLAN-TIME table pruning: an
-    * excluded table gets no tailer, no connection, no partitions, and a
-    * frozen offset (its composite-offset entry never advances — the safe
-    * direction: dropping the filter later replays from the freeze point,
-    * duplicating rather than losing). Base-column conjuncts compile into
-    * the per-row wire predicate the tagged readers apply. */
-  private val tagSchema = StructType(Seq(org.apache.spark.sql.types
-    .StructField(MultiCdc.TableColumn,
-      org.apache.spark.sql.types.StringType, nullable = false)))
   private val (tableConjuncts, rowConjuncts) =
-    pushed.partition(_.references.forall(_ == MultiCdc.TableColumn))
+    pushed.toSeq.partition(MultiCdc.tableOnly)
   private val tablePred: WirePred =
-    CdcWireFilters.compileAll(tableConjuncts.toSeq, tagSchema, typed = true)
-  private val rowPred: WirePred =
-    CdcWireFilters.compileAll(rowConjuncts.toSeq, baseSchema, opts.typed)
+    CdcWireFilters.compileAll(tableConjuncts, MultiCdc.TagSchema, typed = true)
+  private val staticRowFilters = plane.rowFilters(rowConjuncts)
 
-  /** Runtime pushdown (the operative path — see CdcStreamingPushdown):
+  /** Runtime pushdown (the operative path — see CdcStreamingPushdown),
     * split exactly like the static conjuncts. All advisory: a raced
     * batch runs unpruned, never incorrectly. */
   @volatile private var runtimeTablePred: WirePred = null
-  @volatile private var runtimeRowPred: WirePred = null
-  @volatile private var runtimeMask: Array[Boolean] = null
+  @volatile private var runtimeRowFilters: Seq[Filter] = Nil
+  @volatile private var runtimeReferenced: Option[Set[String]] = None
   override def pushRuntime(
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      referenced: Option[Set[String]]): Unit = {
+      filters: Seq[Filter], referenced: Option[Set[String]]): Unit = {
     CdcPushdownProbe.lastRuntimeFilters = filters.map(_.toString)
     CdcPushdownProbe.lastRuntimeReferenced = referenced
-    val (tf, rf) =
-      filters.partition(_.references.forall(_ == MultiCdc.TableColumn))
-    runtimeTablePred = CdcWireFilters.compileAll(tf, tagSchema, typed = true)
-    runtimeRowPred = CdcWireFilters.compileAll(
-      rf.filterNot(_.references.contains(MultiCdc.TableColumn)),
-      baseSchema, opts.typed)
-    runtimeMask = referenced match {
-      case Some(refs) if !baseRequired.fields.forall(f => refs.contains(f.name)) =>
-        baseRequired.fields.map(f => refs.contains(f.name))
-      case _ => null
-    }
+    val (tf, rf) = filters.partition(MultiCdc.tableOnly)
+    runtimeTablePred =
+      CdcWireFilters.compileAll(tf, MultiCdc.TagSchema, typed = true)
+    runtimeRowFilters = plane.rowFilters(rf)
+    runtimeReferenced = referenced
   }
 
-  private def included(t: String): Boolean = {
-    val row = Array(t); val noNull = Array(false)
-    (tablePred == null || tablePred.eval(row, noNull)) &&
-      (runtimeTablePred == null || runtimeTablePred.eval(row, noNull))
-  }
+  private def included(t: String): Boolean =
+    MultiCdc.admits(tablePred, t) && MultiCdc.admits(runtimeTablePred, t)
 
-  /** Per-table checkpoint scope for the committed-GTID watermark file —
+  /** Per-table checkpoint scope for the committed-position watermark —
     * URL-encoded so `db.table` never introduces path separators. */
   private def subCheckpoint(t: String): String =
     checkpointLocation + "/table-" + java.net.URLEncoder.encode(t, "UTF-8")
 
-  private val streams: Seq[(String, CdcMicroBatchStream)] = tables.map { t =>
+  private val streams: Seq[(String, CdcTableStream)] = tables.map { t =>
+    val (wire, req) = plane.delegateSchema(t)
     // resolve a composite startingGtid to THIS table's entry before the
-    // copy narrows the options to single-table mode
-    t -> new CdcMicroBatchStream(
-      baseSchema, opts.copy(table = t, tables = Seq.empty,
-        startingGtid = opts.startFor(t).map(_.toString)), subCheckpoint(t),
-      baseRequired)
+    // copy narrows the options to single-table mode; `normalized` rides
+    // along, so a normalized delegate's tailer absorbs mid-stream DDL
+    val one = opts.copy(table = t, tables = Seq.empty)
+    t -> (if (vector)
+      new DomainVectorMicroBatchStream(wire, one.copy(startingGtid =
+        MultiVectorOffset.startFor(opts.startingGtid, tables, t)),
+        subCheckpoint(t), req)
+    else
+      new CdcMicroBatchStream(wire, one.copy(startingGtid =
+        opts.startFor(t).map(_.toString)), subCheckpoint(t), req))
   }
 
-  private def gtidOf(o: Offset, t: String): GtidOffset = o match {
-    case m: MultiGtidOffset => GtidOffset(m.of(t))
-    case g: GtidOffset      => g // degenerate: never produced here
+  /** This table's slice of a composite offset, in the delegate's own
+    * offset shape (GtidOffset or DomainVectorOffset). */
+  private def posOf(o: Offset, t: String): Offset = o match {
+    case m: MultiGtidOffset   => GtidOffset(m.of(t))
+    case m: MultiVectorOffset => m.of(t)
     case other => throw new IllegalArgumentException(
       s"unexpected offset type ${other.getClass}")
   }
 
+  private def composite(entries: Seq[(String, Offset)]): Offset =
+    if (vector)
+      MultiVectorOffset(entries.map { case (t, o) =>
+        t -> o.asInstanceOf[DomainVectorOffset] })
+    else
+      MultiGtidOffset(entries.map { case (t, o) =>
+        t -> o.asInstanceOf[GtidOffset].gtid })
+
   override def initialOffset(): Offset =
-    MultiGtidOffset(streams.map { case (t, s) =>
-      t -> s.initialOffset().asInstanceOf[GtidOffset].gtid
-    })
+    composite(streams.map { case (t, s) => t -> s.initialOffset() })
 
   /** Trigger.AvailableNow: every delegate anchors its own 'now' (first
     * quiet moment of its table's stream); the composite then drains to
@@ -200,52 +207,34 @@ class MultiCdcMicroBatchStream(
     streams.foreach(_._2.prepareForTriggerAvailableNow())
 
   override def deserializeOffset(json: String): Offset =
-    MultiGtidOffset.fromJson(json)
-
-  override def getDefaultReadLimit: ReadLimit =
-    ReadLimit.maxRows(opts.maxEventsPerBatch)
+    if (vector) MultiVectorOffset.fromJson(json)
+    else MultiGtidOffset.fromJson(json)
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val max = limit match {
-      case r: ReadMaxRows => math.min(r.maxRows(), Int.MaxValue).toInt
-      case _ => opts.maxEventsPerBatch
-    }
-    val nIncluded = math.max(1, tables.count(included))
-    val perTable = math.max(1, max / nIncluded)
-    MultiGtidOffset(streams.map { case (t, s) =>
+    val perTable =
+      math.max(1, rowBudget(limit) / math.max(1, tables.count(included)))
+    composite(streams.map { case (t, s) =>
       // excluded tables freeze at their current position and idle their
       // tailer: no connection, no buffered backlog. (Runtime `_table`
       // pruning arrives with the first batch's optimization, so batch 0
       // may tail every table once — unoptimized, never incorrect.)
-      t -> (if (!included(t)) { s.idle(); gtidOf(start, t).gtid }
-            else s.latestOffset(gtidOf(start, t), ReadLimit.maxRows(perTable))
-              .asInstanceOf[GtidOffset].gtid)
+      t -> (if (!included(t)) { s.idle(); posOf(start, t) }
+            else s.latestOffset(posOf(start, t), ReadLimit.maxRows(perTable)))
     })
   }
-
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
     streams.flatMap { case (t, s) =>
       if (!included(t)) Array.empty[InputPartition]
-      else s.planInputPartitions(gtidOf(start, t), gtidOf(end, t))
+      else s.planInputPartitions(posOf(start, t), posOf(end, t))
         .map(p => TaggedCdcPartition(p, t): InputPartition)
     }.toArray
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val pred = (rowPred, runtimeRowPred) match {
-      case (null, r) => r
-      case (s, null) => s
-      case (s, r)    => WirePred.AndP(s, r)
-    }
-    new TaggedCdcReaderFactory(
-      baseSchema, baseRequired, opts.typed, appendTable, emitBase, pred,
-      runtimeMask)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    plane.readerFactory(staticRowFilters, runtimeRowFilters, runtimeReferenced)
 
   override def commit(end: Offset): Unit =
-    streams.foreach { case (t, s) => s.commit(gtidOf(end, t)) }
+    streams.foreach { case (t, s) => s.commit(posOf(end, t)) }
 
   override def stop(): Unit = streams.foreach(_._2.stop())
 
@@ -262,27 +251,127 @@ class MultiCdcMicroBatchStream(
   }
 }
 
+/** What `schemaMode` changes in a composite stream: the schema each
+  * table's delegate decodes, which non-`_table` conjuncts reach the
+  * wire, and the reader factory that turns tagged partitions into
+  * output rows. */
+private[cdc] sealed trait CompositePlane {
+  /** (wire schema, pruned schema) of table `t`'s delegate. */
+  def delegateSchema(t: String): (StructType, StructType)
+  /** The non-`_table` conjuncts this plane compiles into the wire
+    * predicate (the rest stay with Spark — every filter is residual). */
+  def rowFilters(fs: Seq[Filter]): Seq[Filter]
+  def readerFactory(static: Seq[Filter], runtime: Seq[Filter],
+      referenced: Option[Set[String]]): PartitionReaderFactory
+}
+
+/** `schemaMode=uniform`: every table shares one base schema (checked at
+  * inference), so one base-column wire predicate and one decode-skip
+  * mask serve all tables, and [[TaggedCdcReaderFactory]] appends
+  * `_table`. Opens no connection of its own. */
+private[cdc] final class UniformPlane(schema: StructType, required: StructType,
+    typed: Boolean) extends CompositePlane {
+  require(schema.fields.lastOption.exists(_.name == MultiCdc.TableColumn),
+    s"multi-table schema must end in the ${MultiCdc.TableColumn} column")
+  private val baseSchema = StructType(schema.fields.dropRight(1))
+  private val baseRequired = TaggedCdcReaderFactory.baseRequired(schema, required)
+
+  def delegateSchema(t: String): (StructType, StructType) =
+    (baseSchema, baseRequired)
+  def rowFilters(fs: Seq[Filter]): Seq[Filter] =
+    fs.filterNot(_.references.contains(MultiCdc.TableColumn))
+  def readerFactory(static: Seq[Filter], runtime: Seq[Filter],
+      referenced: Option[Set[String]]): PartitionReaderFactory = {
+    val mask = referenced match {
+      case Some(refs) if !baseRequired.fields.forall(f => refs.contains(f.name)) =>
+        baseRequired.fields.map(f => refs.contains(f.name))
+      case _ => null
+    }
+    new TaggedCdcReaderFactory(schema, required, typed,
+      WirePred.and(CdcWireFilters.compileAll(static, baseSchema, typed),
+        CdcWireFilters.compileAll(runtime, baseSchema, typed)), mask)
+  }
+}
+
+/** `schemaMode=normalized` ([[NormalizedCdc]]): heterogeneous tables,
+  * so each delegate decodes its table's own wire schema and metadata
+  * conjuncts compile per table. The output schema cannot carry N wire
+  * schemas, so the plane re-probes each table (one connection per
+  * table, concurrent — the same cost as planning-time inference) and
+  * fails loudly on drift against the planning schema, the single-table
+  * restart contract. */
+private[cdc] final class NormalizedPlane(schema: StructType,
+    required: StructType, opts: CdcOptions) extends CompositePlane {
+  private val fieldsByTable: Seq[(String, Seq[CdcField])] =
+    CdcConcurrent.map(opts.allTables)(t => t -> CdcProbe.schemaFields(opts, t))
+  locally {
+    val now = NormalizedCdc.schemaFor(fieldsByTable, opts.typed)
+    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+    if (shape(now) != shape(schema)) throw new CdcProtocolException(
+      s"schema drift between planning and stream start: normalized schema " +
+        s"was ${shape(schema)}, probes now give ${shape(now)} — restart " +
+        "the query")
+  }
+  private val wireStructs: Map[String, StructType] = fieldsByTable.map {
+    case (t, fs) => t -> SqlTypes.toStructType(fs, opts.typed)
+  }.toMap
+
+  def delegateSchema(t: String): (StructType, StructType) =
+    (wireStructs(t), wireStructs(t))
+  def rowFilters(fs: Seq[Filter]): Seq[Filter] =
+    fs.filter(_.references.forall(NormalizedCdc.Meta.contains))
+  def readerFactory(static: Seq[Filter], runtime: Seq[Filter],
+      referenced: Option[Set[String]]): PartitionReaderFactory =
+    new NormalizedCdcReaderFactory(
+      fieldsByTable.map { case (t, fs) =>
+        t -> WireNormalizer(t, fs, opts.typed, required)
+      }.toMap,
+      fieldsByTable.map { case (t, _) =>
+        t -> WirePred.and(
+          CdcWireFilters.compileAll(static, wireStructs(t), opts.typed),
+          CdcWireFilters.compileAll(runtime, wireStructs(t), opts.typed))
+      }.filter(_._2 != null).toMap)
+}
+
 /** A single-table partition plus the table it came from. */
 final case class TaggedCdcPartition(inner: InputPartition, table: String)
     extends InputPartition
 
-/** Delegates to the single-table reader (pruned to `baseRequired`) and,
-  * when the projection kept `_table`, appends the constant table value —
-  * a mutable JoinedRow over the inner row, the standard append-a-column
-  * source pattern (rows are projected/copied by the scan exec before
-  * buffering). A `_table`-only projection (`emitBase` false) emits the
-  * tag alone: the inner reader still frames rows and drives GTID
+object TaggedCdcReaderFactory {
+  /** The pruned base-row schema each table decodes; a `_table`-only
+    * projection still decodes one base column for row framing (its
+    * values are discarded). */
+  private[cdc] def baseRequired(schema: StructType, required: StructType): StructType = {
+    val base = StructType(
+      required.fields.filterNot(_.name == MultiCdc.TableColumn))
+    if (base.fields.isEmpty) StructType(schema.fields.take(1)) else base
+  }
+}
+
+/** Uniform-mode reader factory over `schema` (base columns + `_table`)
+  * pruned to `required`: delegates to the single-table reader over the
+  * pruned base row and, when the projection kept `_table`, appends the
+  * constant table value — a mutable JoinedRow over the inner row, the
+  * standard append-a-column source pattern (rows are projected/copied
+  * by the scan exec before buffering). A `_table`-only projection emits
+  * the tag alone: the inner reader still frames rows and drives GTID
   * replay, but its one decoded framing column is discarded so the row
   * width matches `readSchema()`. */
-class TaggedCdcReaderFactory(baseSchema: StructType, baseRequired: StructType,
-    typed: Boolean, appendTable: Boolean, emitBase: Boolean = true,
-    rowPred: WirePred = null, mask: Array[Boolean] = null)
+class TaggedCdcReaderFactory(schema: StructType, required: StructType,
+    typed: Boolean, rowPred: WirePred = null, mask: Array[Boolean] = null)
     extends PartitionReaderFactory {
-  private val projection: Array[Int] =
-    if (baseRequired == baseSchema) null
-    else baseRequired.fields.map(f => baseSchema.fieldIndex(f.name))
-  private val inner =
+  private val appendTable: Boolean =
+    required.fieldNames.contains(MultiCdc.TableColumn)
+  private val emitBase: Boolean =
+    required.fields.exists(_.name != MultiCdc.TableColumn)
+  private val inner = {
+    val baseSchema = StructType(schema.fields.dropRight(1))
+    val baseRequired = TaggedCdcReaderFactory.baseRequired(schema, required)
+    val projection: Array[Int] =
+      if (baseRequired == baseSchema) null
+      else baseRequired.fields.map(f => baseSchema.fieldIndex(f.name))
     new CdcPartitionReaderFactory(baseRequired, typed, projection, rowPred, mask)
+  }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {

@@ -2,7 +2,6 @@ package graft.sources.cdc
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,8 +28,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * `get_json_object`/`from_json` after routing on `_table` — the
   * standard normalized-changelog consumption pattern.
   *
-  * Everything operational is inherited from the uniform composite:
-  * one checkpoint, one [[MultiGtidOffset]] line, per-table
+  * The stream is the one [[CompositeCdcMicroBatchStream]] with the
+  * [[NormalizedPlane]] data plane, so everything operational is shared
+  * with uniform mode: one checkpoint, one composite offset line, per-table
   * committed-GTID watermarks, per-table admission-control split,
   * Trigger.AvailableNow per-table anchors, `_table`-pushdown table
   * pruning, and executor-side GTID-range replay (the data plane never
@@ -310,10 +310,6 @@ final case class WireNormalizer(
   }
 }
 
-/** A single-table replay partition plus its table's normalizer key. */
-final case class NormalizedCdcPartition(inner: InputPartition, table: String)
-    extends InputPartition
-
 /** Creates replay readers that emit NORMALIZED rows: the inner
   * [[CdcReplayReader]] does the GTID-range replay/dedupe/reconnect work
   * and hands each wire row to the table's [[WireNormalizer]]. Per-table
@@ -327,12 +323,11 @@ class NormalizedCdcReaderFactory(
     preds: Map[String, WirePred]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
-      case NormalizedCdcPartition(RuntimeFilteredCdcPartition(rp: CdcReplayPartition, rt), t) =>
-        val static = preds.getOrElse(t, null)
+      case TaggedCdcPartition(RuntimeFilteredCdcPartition(rp: CdcReplayPartition, rt), t) =>
         new CdcReplayReader(rp, Array.empty, typed = true,
-          pred = if (static == null) rt else WirePred.AndP(static, rt),
+          pred = WirePred.and(preds.getOrElse(t, null), rt),
           normalizer = normalizers(t))
-      case NormalizedCdcPartition(rp: CdcReplayPartition, t) =>
+      case TaggedCdcPartition(rp: CdcReplayPartition, t) =>
         new CdcReplayReader(rp, Array.empty, typed = true,
           pred = preds.getOrElse(t, null),
           normalizer = normalizers(t))
@@ -342,7 +337,8 @@ class NormalizedCdcReaderFactory(
 }
 
 /** Bounded one-shot pull of N heterogeneous tables into the normalized
-  * changelog shape — the batch twin of [[NormalizedCdcMicroBatchStream]]
+  * changelog shape — the batch twin of the normalized
+  * [[CompositeCdcMicroBatchStream]]
   * (`spark.read.format("maxscale-cdc").option("schemaMode",
   * "normalized")`), completing the {uniform, normalized} × {batch,
   * stream} matrix. The bootstrap story this serves: snapshot a whole
@@ -387,17 +383,15 @@ final class NormalizedCdcBatch(
     case (t, fs) => t -> SqlTypes.toStructType(fs, opts.typed)
   }.toMap
 
-  private val tagSchema = StructType(Seq(org.apache.spark.sql.types
-    .StructField(MultiCdc.TableColumn, StringType, nullable = false)))
   private val (tableConjuncts, restConjuncts) =
-    pushed.partition(_.references.forall(_ == MultiCdc.TableColumn))
+    pushed.partition(MultiCdc.tableOnly)
   private val metaConjuncts = restConjuncts.filter(
     _.references.forall(NormalizedCdc.Meta.contains))
-  private val tablePred: WirePred =
-    CdcWireFilters.compileAll(tableConjuncts.toSeq, tagSchema, typed = true)
+  private val tablePred: WirePred = CdcWireFilters.compileAll(
+    tableConjuncts.toSeq, MultiCdc.TagSchema, typed = true)
 
   private def runtimeMetaConjuncts =
-    runtime().filter(f => !f.references.forall(_ == MultiCdc.TableColumn) &&
+    runtime().filter(f => !MultiCdc.tableOnly(f) &&
       f.references.forall(NormalizedCdc.Meta.contains))
 
   /** Runtime `_table` predicate, compiled once per distinct filter()
@@ -406,20 +400,16 @@ final class NormalizedCdcBatch(
   private var rtPredFor: Seq[org.apache.spark.sql.sources.Filter] = null
   private var rtPred: WirePred = null
   private def runtimeTablePred: WirePred = synchronized {
-    val tf = runtime().filter(_.references.forall(_ == MultiCdc.TableColumn)).toSeq
+    val tf = runtime().filter(MultiCdc.tableOnly).toSeq
     if (tf != rtPredFor) {
       rtPredFor = tf
-      rtPred = CdcWireFilters.compileAll(tf, tagSchema, typed = true)
+      rtPred = CdcWireFilters.compileAll(tf, MultiCdc.TagSchema, typed = true)
     }
     rtPred
   }
 
-  private def included(t: String): Boolean = {
-    val row = Array(t); val noNull = Array(false)
-    val rt = runtimeTablePred
-    (tablePred == null || tablePred.eval(row, noNull)) &&
-      (rt == null || rt.eval(row, noNull))
-  }
+  private def included(t: String): Boolean =
+    MultiCdc.admits(tablePred, t) && MultiCdc.admits(runtimeTablePred, t)
 
   /** Parsed (and table-validated) composite endGtid, once — `endFor`
     * runs per table (the same memoization as [[CdcBatch.endComposite]],
@@ -458,7 +448,7 @@ final class NormalizedCdcBatch(
     // delegate HERE (fieldsByTable froze the static superset)
     CdcConcurrent.map(fieldsByTable.map(_._1).filter(included)) { t =>
       innerFor(t).planInputPartitions()
-        .map(p => NormalizedCdcPartition(p, t): InputPartition)
+        .map(p => TaggedCdcPartition(p, t): InputPartition)
     }.flatten.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -470,203 +460,4 @@ final class NormalizedCdcBatch(
         t -> CdcWireFilters.compileAll(
           metaConjuncts.toSeq, wireStructs(t), opts.typed)
       }.filter(_._2 != null).toMap)
-}
-
-/** One [[CdcMicroBatchStream]] per (heterogeneous) table behind the
-  * composite [[MultiGtidOffset]] — the normalized twin of
-  * [[MultiCdcMicroBatchStream]]. Delegates plan replay descriptors
-  * against their OWN wire schema; only the reader factory differs.
-  *
-  * The output schema cannot carry N wire schemas, so the stream
-  * re-probes each table at construction (one connection per table,
-  * concurrent — the same cost as planning-time inference) and fails
-  * loudly on drift against the planning schema, the single-table
-  * restart contract.
-  */
-class NormalizedCdcMicroBatchStream(
-    schema: StructType, required: StructType, opts: CdcOptions,
-    checkpointLocation: String,
-    pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends MicroBatchStream with SupportsAdmissionControl
-    with SupportsTriggerAvailableNow with ReportsSourceMetrics
-    with CdcPushdownSupport {
-
-  private val tables = opts.allTables
-
-  private val fieldsByTable: Seq[(String, Seq[CdcField])] =
-    CdcConcurrent.map(tables)(t => t -> CdcProbe.schemaFields(opts, t))
-  locally {
-    val now = NormalizedCdc.schemaFor(fieldsByTable, opts.typed)
-    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-    if (shape(now) != shape(schema)) throw new CdcProtocolException(
-      s"schema drift between planning and stream start: normalized schema " +
-        s"was ${shape(schema)}, probes now give ${shape(now)} — restart " +
-        "the query")
-  }
-  private val wireStructs: Map[String, StructType] = fieldsByTable.map {
-    case (t, fs) => t -> SqlTypes.toStructType(fs, opts.typed)
-  }.toMap
-
-  /** `_table`-only conjuncts prune whole tables at plan time (no
-    * tailer, no connection, frozen offset — same contract as the
-    * uniform composite); metadata-only conjuncts compile per table
-    * against that table's wire schema and drop rows before payload
-    * encoding. Everything else stays with Spark (all filters are
-    * residual). */
-  private val tagSchema = StructType(Seq(org.apache.spark.sql.types
-    .StructField(MultiCdc.TableColumn, StringType, nullable = false)))
-  private val (tableConjuncts, restConjuncts) =
-    pushed.partition(_.references.forall(_ == MultiCdc.TableColumn))
-  private val metaConjuncts = restConjuncts.filter(
-    _.references.forall(NormalizedCdc.Meta.contains))
-  private val tablePred: WirePred =
-    CdcWireFilters.compileAll(tableConjuncts.toSeq, tagSchema, typed = true)
-
-  @volatile private var runtimeTablePred: WirePred = null
-  @volatile private var runtimeMetaConjuncts:
-    Seq[org.apache.spark.sql.sources.Filter] = Nil
-  override def pushRuntime(
-      filters: Seq[org.apache.spark.sql.sources.Filter],
-      referenced: Option[Set[String]]): Unit = {
-    CdcPushdownProbe.lastRuntimeFilters = filters.map(_.toString)
-    CdcPushdownProbe.lastRuntimeReferenced = referenced
-    val (tf, rf) =
-      filters.partition(_.references.forall(_ == MultiCdc.TableColumn))
-    runtimeTablePred = CdcWireFilters.compileAll(tf, tagSchema, typed = true)
-    runtimeMetaConjuncts =
-      rf.filter(_.references.forall(NormalizedCdc.Meta.contains))
-  }
-
-  private def predFor(t: String): WirePred = {
-    val static = CdcWireFilters.compileAll(
-      metaConjuncts.toSeq, wireStructs(t), opts.typed)
-    val runtime = CdcWireFilters.compileAll(
-      runtimeMetaConjuncts, wireStructs(t), opts.typed)
-    (static, runtime) match {
-      case (null, r) => r
-      case (s, null) => s
-      case (s, r)    => WirePred.AndP(s, r)
-    }
-  }
-
-  private def included(t: String): Boolean = {
-    val row = Array(t); val noNull = Array(false)
-    (tablePred == null || tablePred.eval(row, noNull)) &&
-      (runtimeTablePred == null || runtimeTablePred.eval(row, noNull))
-  }
-
-  private def subCheckpoint(t: String): String =
-    checkpointLocation + "/table-" + java.net.URLEncoder.encode(t, "UTF-8")
-
-  /** `domainMode=vector` composes here (r10 verdict item 4's second
-    * half — the multi-master HETEROGENEOUS database): delegates become
-    * per-table [[DomainVectorMicroBatchStream]]s behind a
-    * [[MultiVectorOffset]] instead of single-triple streams behind a
-    * [[MultiGtidOffset]]; everything else (per-table checkpoint scopes,
-    * `_table` pruning, per-table wire predicates, the normalizing data
-    * plane) is offset-shape-agnostic and identical. */
-  private val vector = opts.domainVector
-
-  private val streams: Seq[(String, MicroBatchStream with SupportsAdmissionControl
-      with SupportsTriggerAvailableNow with ReportsSourceMetrics)] =
-    tables.map { t =>
-      // normalized stays TRUE: the delegate's tailer then ABSORBS
-      // mid-stream DDL re-schema (validateEvolved + GTID re-location)
-      // instead of failing the query — the one divergence from uniform
-      // mode's documented fail-and-restart (SURVEY.md §1.3), closed
-      // because normalized payload rows are schema-free
-      t -> (if (vector)
-        new DomainVectorMicroBatchStream(
-          wireStructs(t), opts.copy(table = t, tables = Seq.empty,
-            startingGtid = MultiVectorOffset.startFor(opts.startingGtid, tables, t)),
-          subCheckpoint(t), wireStructs(t))
-      else
-        new CdcMicroBatchStream(
-          wireStructs(t), opts.copy(table = t, tables = Seq.empty,
-            startingGtid = opts.startFor(t).map(_.toString)),
-          subCheckpoint(t), wireStructs(t)))
-    }
-
-  private def idleOf(s: MicroBatchStream): Unit = s match {
-    case c: CdcMicroBatchStream          => c.idle()
-    case d: DomainVectorMicroBatchStream => d.idle()
-    case _ => ()
-  }
-
-  /** This table's slice of a composite offset, in the delegate's own
-    * offset shape (GtidOffset or DomainVectorOffset). */
-  private def posOf(o: Offset, t: String): Offset = o match {
-    case m: MultiGtidOffset    => GtidOffset(m.of(t))
-    case m: MultiVectorOffset  => m.of(t)
-    case g: GtidOffset         => g
-    case v: DomainVectorOffset => v
-    case other => throw new IllegalArgumentException(
-      s"unexpected offset type ${other.getClass}")
-  }
-
-  private def composite(entries: Seq[(String, Offset)]): Offset =
-    if (vector)
-      MultiVectorOffset(entries.map { case (t, o) =>
-        t -> o.asInstanceOf[DomainVectorOffset] })
-    else
-      MultiGtidOffset(entries.map { case (t, o) =>
-        t -> o.asInstanceOf[GtidOffset].gtid })
-
-  override def initialOffset(): Offset =
-    composite(streams.map { case (t, s) => t -> s.initialOffset() })
-
-  override def prepareForTriggerAvailableNow(): Unit =
-    streams.foreach(_._2.prepareForTriggerAvailableNow())
-
-  override def deserializeOffset(json: String): Offset =
-    if (vector) MultiVectorOffset.fromJson(json)
-    else MultiGtidOffset.fromJson(json)
-
-  override def getDefaultReadLimit: ReadLimit =
-    ReadLimit.maxRows(opts.maxEventsPerBatch)
-
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val max = limit match {
-      case r: ReadMaxRows => math.min(r.maxRows(), Int.MaxValue).toInt
-      case _ => opts.maxEventsPerBatch
-    }
-    val nIncluded = math.max(1, tables.count(included))
-    val perTable = math.max(1, max / nIncluded)
-    composite(streams.map { case (t, s) =>
-      t -> (if (!included(t)) { idleOf(s); posOf(start, t) }
-            else s.latestOffset(posOf(start, t), ReadLimit.maxRows(perTable)))
-    })
-  }
-
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead of this method")
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    streams.flatMap { case (t, s) =>
-      if (!included(t)) Array.empty[InputPartition]
-      else s.planInputPartitions(posOf(start, t), posOf(end, t))
-        .map(p => NormalizedCdcPartition(p, t): InputPartition)
-    }.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NormalizedCdcReaderFactory(
-      fieldsByTable.map { case (t, fs) =>
-        t -> WireNormalizer(t, fs, opts.typed, required)
-      }.toMap,
-      tables.map(t => t -> predFor(t)).filter(_._2 != null).toMap)
-
-  override def commit(end: Offset): Unit =
-    streams.foreach { case (t, s) => s.commit(posOf(end, t)) }
-
-  override def stop(): Unit = streams.foreach(_._2.stop())
-
-  override def metrics(latestConsumedOffset: java.util.Optional[Offset]): java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    streams.foreach { case (t, s) =>
-      m.put(s"$t.included", included(t).toString)
-      s.metrics(java.util.Optional.empty[Offset]()).forEach((k, v) =>
-        m.put(s"$t.$k", v))
-    }
-    m
-  }
 }

@@ -213,7 +213,7 @@ object Bm25IndexView {
     //    compactions and the v2 base is PARTITION-PRUNED to the batch's
     //    doc buckets). Terms at df = 0 leave the dictionary.
     val termsDir = s"$baseDir/terms"
-    if (lastApplied(termsDir) < batchId) {
+    if (IndexFiles.lastApplied(termsDir) < batchId) {
       // every non-tombstone log row is an effective upsert's term
       val plus = logRows.where(col("h").isNotNull)
         .select(col("h"), lit(1L).as("d"))
@@ -237,14 +237,14 @@ object Bm25IndexView {
           (coalesce(col("df_cur"), lit(0L)) + coalesce(col("d"), lit(0L)))
             .as("df"))
         .where(col("df") > 0)
-      swapInWithMarker(merged, termsDir, batchId)
+      IndexFiles.swapInWithMarker(merged, termsDir, batchId)
     }
 
     // 3. stats merge — (n, t) with subtraction: n moves only on a
     //    liveness edge (insert of a dead/unseen doc, delete of a live
     //    one); t moves by new_dl − old_dl of every effective event.
     val statsDir = s"$baseDir/stats"
-    if (lastApplied(statsDir) < batchId) {
+    if (IndexFiles.lastApplied(statsDir) < batchId) {
       val d = eff.agg(
         coalesce(sum(when(col("new_live") && !col("old_live"), 1L)
           .when(!col("new_live") && col("old_live"), -1L)
@@ -258,7 +258,7 @@ object Bm25IndexView {
           (r.getLong(0), r.getLong(1))
         } else (0L, 0L)
       import spark.implicits._
-      swapInWithMarker(
+      IndexFiles.swapInWithMarker(
         Seq((cn + d.getLong(0), ct + d.getLong(1))).toDF("n", "t"),
         statsDir, batchId)
     }
@@ -268,7 +268,7 @@ object Bm25IndexView {
     //    window reading the same pre-state). Latest-wins per doc;
     //    deletes keep a live=false tombstone row.
     val catalogDir = s"$baseDir/catalog"
-    if (lastApplied(catalogDir) < batchId) {
+    if (IndexFiles.lastApplied(catalogDir) < batchId) {
       val newCat = eff.select(col("doc_id"), col("ver"),
         col("new_live").as("live"), col("new_dl").as("dl"))
       val merged = cat.select(col("doc_id"), col("ver").as("v0"),
@@ -279,7 +279,7 @@ object Bm25IndexView {
           coalesce(col("v1"), col("v0")).as("ver"),
           coalesce(col("l1"), col("l0")).as("live"),
           coalesce(col("d1"), col("d0")).as("dl"))
-      swapInWithMarker(merged, catalogDir, batchId)
+      IndexFiles.swapInWithMarker(merged, catalogDir, batchId)
     }
   }
 
@@ -329,7 +329,7 @@ object Bm25IndexView {
   private def compactLocked(spark: SparkSession, baseDir: String): Unit = {
     val logRoot = java.nio.file.Paths.get(s"$baseDir/postings")
     // only fully-committed batches fold (see scaladoc)
-    val committed = lastApplied(s"$baseDir/catalog")
+    val committed = IndexFiles.lastApplied(s"$baseDir/catalog")
     val batchDirs = listBatchDirs(logRoot).filter { p =>
       val id = p.getFileName.toString.stripPrefix("batch=")
       id.toLong <= committed &&
@@ -375,10 +375,10 @@ object Bm25IndexView {
     val kept = merged.select("bucket").distinct()
       .collect().map(_.getLong(0)).toSet
     touched.filterNot(kept).foreach { b =>
-      deleteTree(java.nio.file.Paths.get(s"$baseRoot/bucket=$b"))
+      RenameSwap.deleteRecursively(java.nio.file.Paths.get(s"$baseRoot/bucket=$b"))
     }
     // folded: clear the sources (idempotent-by-dedup if we crash mid-way)
-    batchDirs.foreach(deleteTree)
+    batchDirs.foreach(RenameSwap.deleteRecursively)
     deleteLegacyZones(spark, baseDir)
   }
 
@@ -421,7 +421,7 @@ object Bm25IndexView {
 
   private def deleteLegacyZones(spark: SparkSession, baseDir: String): Unit = {
     loosePostingsFiles(baseDir).foreach(java.nio.file.Files.deleteIfExists(_))
-    deleteTree(java.nio.file.Paths.get(s"$baseDir/postings_compacted"))
+    RenameSwap.deleteRecursively(java.nio.file.Paths.get(s"$baseDir/postings_compacted"))
   }
 
   private def withVer(df: DataFrame): DataFrame =
@@ -633,34 +633,5 @@ object Bm25IndexView {
       .unionByName(counted("postings_kept",
         graft.operators.TextOps.bm25ServedFrom(postings, dfx, n)))
       .orderBy("metric")
-  }
-
-  private def lastApplied(dir: String): Long = {
-    val p = java.nio.file.Paths.get(dir, "_applied_batch")
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
-    else -1L
-  }
-
-  private def swapInWithMarker(
-      df: DataFrame, dir: String, batchId: Long): Unit = {
-    val target = java.nio.file.Paths.get(dir)
-    val next = java.nio.file.Paths.get(dir + ".next-" + System.nanoTime())
-    val old  = java.nio.file.Paths.get(dir + ".old-" + System.nanoTime())
-    df.write.mode(SaveMode.Overwrite).parquet(next.toString)
-    java.nio.file.Files.write(next.resolve("_applied_batch"),
-      batchId.toString.getBytes("UTF-8"))
-    if (java.nio.file.Files.exists(target))
-      java.nio.file.Files.move(target, old)
-    java.nio.file.Files.move(next, target)
-    if (java.nio.file.Files.exists(old)) deleteTree(old)
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
   }
 }

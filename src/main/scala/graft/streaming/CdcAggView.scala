@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -51,7 +51,7 @@ object CdcAggView {
       groupCol: String,
       valueCol: String): Unit = {
     val spark = batch.sparkSession
-    if (lastApplied(aggDir) < batchId) {
+    if (IndexFiles.lastApplied(aggDir) < batchId) {
       val w = Window.partitionBy(col(keyCol))
         .orderBy(orderCols.map(col(_).desc): _*)
       val delta = batch
@@ -111,7 +111,7 @@ object CdcAggView {
             coalesce(col("ds2"), lit(0).cast(S2))).cast(S2).as("s2"))
         .where(col("n") > 0)
 
-      swapInWithMarker(merged, aggDir, batchId)
+      IndexFiles.swapInWithMarker(merged, aggDir, batchId)
     }
     CdcSink.applyChangelog(batch, stateDir, keyCol, orderCols)
   }
@@ -127,34 +127,4 @@ object CdcAggView {
   /** The view: (g, n, s1, s2) per group. */
   def read(spark: org.apache.spark.sql.SparkSession, aggDir: String): DataFrame =
     spark.read.parquet(aggDir).where(col("g").isNotNull)
-
-  private def markerPath(dir: String) =
-    java.nio.file.Paths.get(dir, "_applied_batch")
-
-  private def lastApplied(aggDir: String): Long = {
-    val p = markerPath(aggDir)
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
-    else -1L
-  }
-
-  private def swapInWithMarker(
-      df: DataFrame, dir: String, batchId: Long): Unit = {
-    val target = java.nio.file.Paths.get(dir)
-    val next = java.nio.file.Paths.get(dir + ".next-" + System.nanoTime())
-    val old  = java.nio.file.Paths.get(dir + ".old-" + System.nanoTime())
-    df.write.mode(SaveMode.Overwrite).parquet(next.toString)
-    // marker rides inside the directory => commits atomically with it
-    java.nio.file.Files.write(next.resolve("_applied_batch"),
-      batchId.toString.getBytes("UTF-8"))
-    if (java.nio.file.Files.exists(target))
-      java.nio.file.Files.move(target, old)
-    java.nio.file.Files.move(next, target)
-    if (java.nio.file.Files.exists(old)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(old).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
 }

@@ -52,15 +52,17 @@ object RenameSwap extends TableSwap {
     if (java.nio.file.Files.exists(dir))
       java.nio.file.Files.move(dir, old)
     java.nio.file.Files.move(next, dir)
-    if (java.nio.file.Files.exists(old))
-      deleteRecursively(old)
+    deleteRecursively(old)
   }
 
-  private[streaming] def deleteRecursively(p: java.nio.file.Path): Unit = {
+  /** Delete a directory tree, deepest entries first; a missing `p` is
+    * a no-op. */
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq
-      .sortBy(-_.getNameCount)
-      .foreach(java.nio.file.Files.deleteIfExists(_))
+    if (java.nio.file.Files.exists(p))
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq
+        .sortBy(-_.getNameCount)
+        .foreach(java.nio.file.Files.deleteIfExists(_))
   }
 }
 

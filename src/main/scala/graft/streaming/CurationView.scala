@@ -54,25 +54,14 @@ object CurationView {
     swap(verdicts, s"$baseDir/verdicts")
   }
 
-  /** Two-rename table swap (the DedupClusterView protocol). Readers see
-    * the OLD table or the NEW table, never a half-written mix — but there
-    * is a brief not-found window between the two renames (and a crash
-    * between them strands the table under `.old-*`/`.next-*`); a reader
-    * that hits it should retry, which [[readVerdicts]] does. */
-  private def swap(table: DataFrame, tableDir: String): Unit = {
-    val dir = java.nio.file.Paths.get(tableDir)
-    val next = java.nio.file.Paths.get(tableDir + ".next-" + System.nanoTime())
-    val old = java.nio.file.Paths.get(tableDir + ".old-" + System.nanoTime())
-    table.write.mode(SaveMode.Overwrite).parquet(next.toString)
-    if (java.nio.file.Files.exists(dir))
-      java.nio.file.Files.move(dir, old)
-    java.nio.file.Files.move(next, dir)
-    if (java.nio.file.Files.exists(old)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(old).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-  }
+  /** Two-rename table swap ([[RenameSwap]]). Readers see the OLD table
+    * or the NEW table, never a half-written mix — but there is a brief
+    * not-found window between the two renames (and a crash between them
+    * strands the table under `.old-*`/`.next-*`); a reader that hits it
+    * should retry, which [[readVerdicts]] does. */
+  private def swap(table: DataFrame, tableDir: String): Unit =
+    RenameSwap.publish(tableDir,
+      next => table.write.mode(SaveMode.Overwrite).parquet(next))
 
   /** The maintained view: one verdict row per document seen so far.
     * Retries around the read ITSELF (not just an existence pre-check —

@@ -61,19 +61,8 @@ object DedupClusterView {
     val labels = graft.operators.ConnectedComponents.labels(nodes, edges)
       .select(col("id").as("doc_id"), col("cluster_id"))
 
-    val tableDir = s"$baseDir/labels"
-    val dir = java.nio.file.Paths.get(tableDir)
-    val next = java.nio.file.Paths.get(tableDir + ".next-" + System.nanoTime())
-    val old = java.nio.file.Paths.get(tableDir + ".old-" + System.nanoTime())
-    labels.write.mode(SaveMode.Overwrite).parquet(next.toString)
-    if (java.nio.file.Files.exists(dir))
-      java.nio.file.Files.move(dir, old)
-    java.nio.file.Files.move(next, dir)
-    if (java.nio.file.Files.exists(old)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(old).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
+    RenameSwap.publish(s"$baseDir/labels",
+      next => labels.write.mode(SaveMode.Overwrite).parquet(next))
   }
 
   /** The maintained view: (doc_id, cluster_id) for every doc that has
@@ -94,14 +83,7 @@ object DedupClusterView {
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .distinct()
-    val dir = java.nio.file.Paths.get(edgesDir)
-    val next = java.nio.file.Paths.get(edgesDir + ".next-" + System.nanoTime())
-    val old = java.nio.file.Paths.get(edgesDir + ".old-" + System.nanoTime())
-    distinctEdges.write.mode(SaveMode.Overwrite).parquet(next.toString)
-    java.nio.file.Files.move(dir, old)
-    java.nio.file.Files.move(next, dir)
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(old).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.delete)
+    RenameSwap.publish(edgesDir,
+      next => distinctEdges.write.mode(SaveMode.Overwrite).parquet(next))
   }
 }

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 /** Shared file discipline of the maintained-index views
   * ([[Bm25IndexView]], [[VecIndexView]]): per-batch log partitions,
   * the two-rename atomic swap with the `_applied_batch` marker INSIDE
-  * the new directory (the CdcAggView discipline), and recursive
-  * deletes. */
+  * the new directory, and recursive deletes. Also used by
+  * [[CdcAggView]] and [[IndexHealthView]]. */
 private[streaming] object IndexFiles {
 
   def listBatchDirs(logRoot: java.nio.file.Path): Seq[java.nio.file.Path] = {
@@ -25,26 +25,15 @@ private[streaming] object IndexFiles {
     else -1L
   }
 
-  def swapInWithMarker(df: DataFrame, dir: String, batchId: Long): Unit = {
-    val target = java.nio.file.Paths.get(dir)
-    val next = java.nio.file.Paths.get(dir + ".next-" + System.nanoTime())
-    val old  = java.nio.file.Paths.get(dir + ".old-" + System.nanoTime())
-    df.write.mode(SaveMode.Overwrite).parquet(next.toString)
-    java.nio.file.Files.write(next.resolve("_applied_batch"),
-      batchId.toString.getBytes("UTF-8"))
-    if (java.nio.file.Files.exists(target))
-      java.nio.file.Files.move(target, old)
-    java.nio.file.Files.move(next, target)
-    if (java.nio.file.Files.exists(old)) deleteTree(old)
-  }
-
-  def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-  }
+  /** Publish `df` as the new generation of `dir` through [[RenameSwap]];
+    * the marker is written into the staged directory, so it commits
+    * atomically with the data it describes. */
+  def swapInWithMarker(df: DataFrame, dir: String, batchId: Long): Unit =
+    RenameSwap.publish(dir, { next =>
+      df.write.mode(SaveMode.Overwrite).parquet(next)
+      java.nio.file.Files.write(java.nio.file.Paths.get(next, "_applied_batch"),
+        batchId.toString.getBytes("UTF-8"))
+    })
 
   // ---------------------------------------------------------------
   // Compact/ingest mutual-exclusion lease. The views' compactions

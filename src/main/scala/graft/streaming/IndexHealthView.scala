@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** `s_index_health`: incrementally-maintained index-health table from
@@ -49,7 +49,7 @@ object IndexHealthView {
       codebooks: Seq[(Int, Long, Seq[Long])]): Unit = {
     val spark = vecs.sparkSession
     val tableDir = s"$baseDir/health"
-    if (lastApplied(tableDir) >= batchId) return
+    if (IndexFiles.lastApplied(tableDir) >= batchId) return
     val batchAgg = StreamOps.ivfPqEncodeProj(vecs, cells, codebooks)
       .groupBy("cell_id")
       .agg(count(lit(1)).as("n_vecs"), sum("err").as("inertia_fx"))
@@ -67,7 +67,7 @@ object IndexHealthView {
           .as("n_vecs"),
         (coalesce(col("i_cur"), lit(0L)) + coalesce(col("i_new"), lit(0L)))
           .as("inertia_fx"))
-    swapInWithMarker(merged, tableDir, batchId)
+    IndexFiles.swapInWithMarker(merged, tableDir, batchId)
   }
 
   /** The health frame in `q_index_health`'s exact shape — per-cell
@@ -86,31 +86,5 @@ object IndexHealthView {
       .unionByName(tot.select(lit(-1L).as("cell_id"), col("n").as("n_vecs"),
         lit(ShareFx).as("share_fx"), col("ti").as("inertia_fx")))
       .orderBy("cell_id")
-  }
-
-  private def lastApplied(dir: String): Long = {
-    val p = java.nio.file.Paths.get(dir, "_applied_batch")
-    if (java.nio.file.Files.exists(p))
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8").trim.toLong
-    else -1L
-  }
-
-  private def swapInWithMarker(
-      df: DataFrame, dir: String, batchId: Long): Unit = {
-    val target = java.nio.file.Paths.get(dir)
-    val next = java.nio.file.Paths.get(dir + ".next-" + System.nanoTime())
-    val old  = java.nio.file.Paths.get(dir + ".old-" + System.nanoTime())
-    df.write.mode(SaveMode.Overwrite).parquet(next.toString)
-    java.nio.file.Files.write(next.resolve("_applied_batch"),
-      batchId.toString.getBytes("UTF-8"))
-    if (java.nio.file.Files.exists(target))
-      java.nio.file.Files.move(target, old)
-    java.nio.file.Files.move(next, target)
-    if (java.nio.file.Files.exists(old)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(old).iterator().asScala.toSeq
-        .sortBy(-_.getNameCount)
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
   }
 }

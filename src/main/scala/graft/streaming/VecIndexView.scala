@@ -293,9 +293,9 @@ object VecIndexView {
     val kept = merged.select("cell_id").distinct()
       .collect().map(_.getLong(0)).toSet
     touched.filterNot(kept).foreach { c =>
-      IndexFiles.deleteTree(java.nio.file.Paths.get(s"$baseRoot/cell_id=$c"))
+      RenameSwap.deleteRecursively(java.nio.file.Paths.get(s"$baseRoot/cell_id=$c"))
     }
-    batchDirs.foreach(IndexFiles.deleteTree)
+    batchDirs.foreach(RenameSwap.deleteRecursively)
   }
 
   /** CELL-SPLIT migration (VERDICT r12 #3): re-shard a maintained index
@@ -405,7 +405,7 @@ object VecIndexView {
       val kept = newRows.select("cell_id").distinct()
         .collect().map(_.getLong(0)).toSet
       touched.diff(kept).foreach { c =>
-        IndexFiles.deleteTree(java.nio.file.Paths.get(s"$baseRoot/cell_id=$c"))
+        RenameSwap.deleteRecursively(java.nio.file.Paths.get(s"$baseRoot/cell_id=$c"))
       }
     }
     // catalog follows the new routing (ver/liveness unchanged)
@@ -509,7 +509,7 @@ object VecIndexView {
             && p.getFileName.toString.startsWith("cell_id="))
           .filterNot(p => kept.contains(
             p.getFileName.toString.stripPrefix("cell_id=").toLong))
-          .foreach(IndexFiles.deleteTree)
+          .foreach(RenameSwap.deleteRecursively)
       // era swap LAST: old-era writers and serve checkpoints refused
       java.nio.file.Files.write(java.nio.file.Paths.get(s"$baseDir/_era"),
         StateGeometryGuard.ivfpq(cells, newCodebooks).render

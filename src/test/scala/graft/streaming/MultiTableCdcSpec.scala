@@ -231,6 +231,65 @@ class MultiTableCdcSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("_table pruning holds in domainMode=vector and schemaMode=normalized " +
+      "too: excluded table not re-contacted, offset entry frozen, " +
+      "included=false, only the included table's rows") {
+    import MockMaxScaleServer.{Schema, event}
+    // (option, value, separator between the composite offset's entries)
+    for ((opt, value, sep) <- Seq(("domainMode", "vector", ';'),
+        ("schemaMode", "normalized", ','))) {
+      val srv = new MockMaxScaleServer(Schema,
+        tableSchemas = Map("db.t1" -> Schema, "db.t2" -> Schema))
+      srv.pushTo("db.t1", event(1, "insert", 1, "a1"))
+      srv.pushTo("db.t1", event(2, "insert", 2, "a2"))
+      srv.pushTo("db.t2", event(1, "insert", 100, "b1"))
+      val name = s"mt_pruned_$value"
+      def rows() = spark.table(name).as[(String, Int)].collect().toSet
+      try {
+        val q = spark.readStream.format("maxscale-cdc")
+          .option("host", "127.0.0.1").option("port", srv.port)
+          .option("user", "u").option("password", "p")
+          .option("tables", "db.t1,db.t2").option("timeoutSeconds", 1)
+          .option(opt, value)
+          .load()
+          .where(col("_table") === "db.t1")
+          .select(col("_table"), col("sequence"))
+          .writeStream.format("memory").queryName(name)
+          .outputMode("append").start()
+        try {
+          eventually(timeout(Span(30, Seconds)), interval(Span(1, Seconds))) {
+            q.processAllAvailable()
+            assert(spark.table(name).count() == 2)
+          }
+          assert(rows() == Set(("db.t1", 1), ("db.t1", 2)), value)
+          q.processAllAvailable() // ensure a post-pushdown batch idled db.t2
+          val t2Conns = srv.requestCount("db.t2")
+          val t2Frozen = q.lastProgress.sources.head.endOffset
+
+          srv.pushTo("db.t1", event(3, "insert", 3, "a3"))
+          srv.pushTo("db.t2", event(2, "insert", 101, "b2")) // must stay unseen
+          eventually(timeout(Span(30, Seconds)), interval(Span(1, Seconds))) {
+            q.processAllAvailable()
+            assert(spark.table(name).count() == 3)
+          }
+          assert(rows() == Set(("db.t1", 1), ("db.t1", 2), ("db.t1", 3)), value)
+          assert(srv.requestCount("db.t2") == t2Conns,
+            s"$value: db.t2 was re-contacted despite the _table filter " +
+              s"(${srv.requestCount("db.t2")} vs $t2Conns)")
+          def t2Entry(off: String): String =
+            off.split(sep).find(_.startsWith("db.t2=")).getOrElse("?")
+          val end = q.lastProgress.sources.head.endOffset
+          assert(t2Entry(end) != "?" && t2Entry(end) == t2Entry(t2Frozen),
+            s"$value: db.t2's offset advanced: $end vs frozen $t2Frozen")
+          val m = q.lastProgress.sources.head.metrics
+          assert(m != null && m.get("db.t2.included") == "false" &&
+            m.get("db.t1.included") == "true",
+            s"$value: per-table inclusion metrics wrong: $m")
+        } finally q.stop()
+      } finally srv.close()
+    }
+  }
+
   test("Trigger.AvailableNow in multi-table mode drains every table's " +
       "backlog and stops") {
     import MockMaxScaleServer.{Schema, event}

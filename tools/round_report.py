@@ -34,19 +34,21 @@ def main():
 
     cur = load("bench_detail_cpus32_sf0.1.json")
     prev = load(f"BENCH_r{rnd - 1}.json")
-    if cur:
+    if cur and cur.get("value") is not None:
+        queries = cur.get("queries") or {}
+        pv = prev.get("value") if prev else None
         out.append(f"- **Full sf0.1 cpus32 bench** "
                    f"(`bench_detail_cpus32_sf0.1.json`): "
-                   f"**{cur['value']:.2f} s / {len(cur['queries'])} queries**"
-                   + (f" (r{rnd-1} driver capture: {prev['value']:.2f} s)"
-                      if prev else ""))
-        top = sorted(cur["queries"].items(), key=lambda kv: -kv[1])[:8]
+                   f"**{cur['value']:.2f} s / {len(queries)} queries**"
+                   + (f" (r{rnd-1} driver capture: {pv:.2f} s)"
+                      if pv is not None else ""))
+        top = sorted(queries.items(), key=lambda kv: -kv[1])[:8]
         out.append("  - slowest: " + ", ".join(
             f"{k} {v:.2f}" for k, v in top))
-        if prev:
-            both = {k: (prev["queries"][k], v)
-                    for k, v in cur["queries"].items()
-                    if k in prev.get("queries", {})}
+        prevq = (prev.get("queries") or {}) if prev else {}
+        if prevq:
+            both = {k: (prevq[k], v)
+                    for k, v in queries.items() if k in prevq}
             imp = sorted(both.items(), key=lambda kv: kv[1][1] - kv[1][0])[:8]
             out.append("  - biggest deltas vs the r%d driver detail: " % (rnd-1)
                        + ", ".join(f"{k} {a:.2f}->{b:.2f}"
@@ -56,14 +58,14 @@ def main():
     if sf10:
         t1 = sf10.get("sf1_total")
         t10 = sf10.get("sf10_total")
-        if t1 and t10:
+        if t1 and t10 and sf10.get("growth_10x_data") is not None:
             out.append(f"- **sf10 subset audit** (`BENCH_r{rnd}_sf10.json`): "
                        f"sf1 {t1:.1f} s -> sf10 {t10:.1f} s warm = "
                        f"**{sf10.get('growth_10x_data')}x/decade**")
         fams = sf10.get("families") or {}
         if fams:
             worst = sorted(fams.items(),
-                           key=lambda kv: -kv[1].get("growth_10x_data", 0))
+                           key=lambda kv: -(kv[1].get("growth_10x_data") or 0))
             out.append("  - family sf10 secs (growth x/decade): " + ", ".join(
                 f"{k} {v.get('sf10_secs')} ({v.get('growth_10x_data')})"
                 for k, v in worst))
@@ -87,14 +89,16 @@ def main():
             load(f"BENCH_r{rnd}_scaling_c32.json")
         s8 = load(f"BENCH_r{rnd}_scaling{tag}_c8.json") if tag else \
             load(f"BENCH_r{rnd}_scaling_c8.json")
-        if s32 and s8:
+        if s32 and s8 and s32.get("value") is not None \
+                and s8.get("value") is not None:
             out.append(f"- **Scaling legs{tag or ' (sf1)'}** "
                        f"(`BENCH_r{rnd}_scaling{tag}_c{{32,8}}.json`, "
                        f"sf={s32.get('sf')}): c32 {s32['value']:.1f} s, "
                        f"c8 {s8['value']:.1f} s / {s32.get('n_queries')} queries")
-            ratios = {k: s8["queries"][k] / v
-                      for k, v in s32["queries"].items()
-                      if k in s8.get("queries", {}) and v > 0}
+            q8 = s8.get("queries") or {}
+            ratios = {k: q8[k] / v
+                      for k, v in (s32.get("queries") or {}).items()
+                      if k in q8 and v > 0}
             if ratios:
                 top = sorted(ratios.items(), key=lambda kv: -kv[1])
                 out.append("  - cpus8/cpus32 wall ratios (core ratio 4): " +
