@@ -49,12 +49,8 @@ import scala.collection.mutable.ArrayBuffer
   * PushedFilters, and pushed conjuncts drop rows before decode on the
   * executors ([[CdcWireFilters]]).
   *
-  * Multi-table mode (`tables=db.a,db.b`) plans each table's ranges
-  * independently (its own anchor) and tags partitions for the `_table`
-  * provenance column; pushed `_table`-only conjuncts prune whole tables
-  * at plan time — an excluded table gets no probe and no connection.
-  * `endGtid` then takes the composite `db.a=0-1-5,db.b=-` form (entries
-  * optional; `-` or absence means anchor-at-quiet for that table).
+  * One table per batch: `tables=` and `schemaMode=normalized` reads go
+  * through [[CompositeCdcBatch]], which plans one of these per table.
   */
 final class CdcBatch(
     schema: StructType,
@@ -67,58 +63,17 @@ final class CdcBatch(
     // call, which Spark re-invokes after filter() fires
     runtime: () => Array[Filter] = () => Array.empty) extends Batch {
 
-  private val multi = opts.allTables.size > 1
-  private val baseSchema: StructType =
-    if (multi) StructType(schema.fields.dropRight(1)) else schema
+  private val table = opts.table
 
   /** Wire fields are always the full table schema (the server sends
     * whole rows; replay needs the GTID trio regardless of projection). */
-  private val fields: Seq[CdcField] = CdcField.fromSchema(baseSchema)
+  private val fields: Seq[CdcField] = CdcField.fromSchema(schema)
+  private lazy val startGtid: Option[Gtid] = opts.startFor(table)
 
-  /** Per-table start: plain `startingGtid` applies to every table; the
-    * composite `db.a=0-1-5,db.b=-` form names each table's own position
-    * (the multi-table bootstrap shape). */
-  private def startFor(table: String): Option[Gtid] = opts.startFor(table)
-
-  /** Parsed (and table-validated) composite endGtid, once — `endFor` is
-    * called per table. */
-  private lazy val endComposite: Option[MultiGtidOffset] =
-    opts.endGtid.filter(_ => multi).map { s =>
-      require(s.contains('='),
-        s"maxscale-cdc: multi-table endGtid must use the composite " +
-          s"'db.a=0-1-5,db.b=-' form, got '$s'")
-      opts.compositeOf(s)
-    }
-
-  private def endFor(table: String): Option[Gtid] = opts.endGtid match {
-    case None => None
-    case Some(s) if !multi => Some(Gtid.parse(s))
-    case Some(_) => endComposite.flatMap(_.of(table))
-  }
-
-  /** Pushed `_table`-only conjuncts → plan-time table pruning (multi
-    * mode), exactly like [[CompositeCdcMicroBatchStream]]. Recomputed
-    * per use: runtime filters arrive after construction. */
-  private def allFilters: Array[Filter] = pushed ++ runtime()
-  private def tablePred: WirePred =
-    CdcWireFilters.compileAll(
-      allFilters.filter(f => multi && MultiCdc.tableOnly(f)).toSeq,
-      MultiCdc.TagSchema, typed = true)
   /** Static pushed-filter predicate — baked into the reader factory,
     * which Spark materializes at PLANNING time (supportsColumnar). */
-  private val rowPred: WirePred = CdcWireFilters.compileAll(
-    pushed.toSeq.filterNot(_.references.contains(MultiCdc.TableColumn)),
-    baseSchema, opts.typed)
-  /** Runtime-filter predicate — arrives AFTER the factory exists, so it
-    * rides the partitions instead ([[RuntimeFilteredCdcPartition]]):
-    * BatchScanExec re-plans partitions after `filter()` fires but not
-    * the factory, and partitions serialize per task with current
-    * state. */
-  private def runtimeRowPred: WirePred = CdcWireFilters.compileAll(
-    runtime().toSeq.filterNot(_.references.contains(MultiCdc.TableColumn)),
-    baseSchema, opts.typed)
-
-  private def included(t: String): Boolean = MultiCdc.admits(tablePred, t)
+  private val rowPred: WirePred =
+    CdcWireFilters.compileAll(pushed.toSeq, schema, opts.typed)
 
   /** Probe buffer cap: in GTID mode the drain loop keeps it near-empty;
     * in synthetic (GTID-less) mode it is a hard batch-size bound because
@@ -126,19 +81,19 @@ final class CdcBatch(
   private val ProbeBuffer = 1 << 20
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val rt = runtimeRowPred
-    def withRt(p: InputPartition): InputPartition =
-      if (rt == null) p else RuntimeFilteredCdcPartition(p, rt)
-    if (!multi && opts.endGtid.exists(_.startsWith("v:")))
+    val parts = opts.endGtid match {
       // vector-bounded pull over an interleaved multi-domain log: one
       // domain-filtered slice set per vector entry, zero driver wire I/O
-      planBoundedVector(opts.table,
-        DomainVectorOffset.fromJson(opts.endGtid.get)).map(withRt)
-    else if (!multi) planTable(opts.table, endFor(opts.table)).map(withRt)
-    else CdcConcurrent.map(opts.allTables.filter(included)) { t =>
-      planTable(t, endFor(t))
-        .map(p => TaggedCdcPartition(withRt(p), t): InputPartition)
-    }.flatten.toArray
+      case Some(v) if v.startsWith("v:") =>
+        planBoundedVector(DomainVectorOffset.fromJson(v))
+      case _ => planTable(opts.endFor(table))
+    }
+    // runtime filters arrive AFTER the factory exists, so their predicate
+    // rides the partitions instead ([[RuntimeFilteredCdcPartition]]):
+    // BatchScanExec re-plans partitions after `filter()` fires but not
+    // the factory, and partitions serialize per task with current state
+    val rt = CdcWireFilters.compileAll(runtime().toSeq, schema, opts.typed)
+    if (rt == null) parts else parts.map(RuntimeFilteredCdcPartition(_, rt))
   }
 
   /** Whether the wire schema carries the GTID trio (server-side resume
@@ -146,21 +101,21 @@ final class CdcBatch(
   private val hasGtidColumns: Boolean =
     Seq("domain", "server_id", "sequence").forall(n => fields.exists(_.name == n))
 
-  private def planTable(table: String, endBound: Option[Gtid]): Array[InputPartition] =
+  private def planTable(endBound: Option[Gtid]): Array[InputPartition] =
     endBound match {
       case Some(e) if hasGtidColumns =>
         // explicitly bounded range: ZERO driver wire I/O — the range is
         // named, the executors replay it (completing at a verified quiet
         // point below the bound, or strictly when endGtidObserved)
-        planBounded(table, e)
+        planBounded(e)
       case _ =>
         val tailer = new CdcTailer(opts.host, opts.port, opts.user,
-          opts.password, table, fields, startFor(table), opts.timeoutMs,
+          opts.password, table, fields, startGtid, opts.timeoutMs,
           maxBuffered = ProbeBuffer, tolerateReSchema = opts.normalized)
         tailer.start()
         try {
-          if (tailer.hasGtidColumns) planReplay(table, tailer)
-          else planSynthetic(table, endBound, tailer)
+          if (tailer.hasGtidColumns) planReplay(tailer)
+          else planSynthetic(endBound, tailer)
         } finally tailer.shutdown()
     }
 
@@ -182,8 +137,8 @@ final class CdcBatch(
     * position and the reader dedupes below it,
     * cdc_connector.cpp:199-213); `replayPartitions = 1` issues only
     * caller-supplied positions. */
-  private def planBounded(table: String, e: Gtid): Array[InputPartition] = {
-    val start = startFor(table)
+  private def planBounded(e: Gtid): Array[InputPartition] = {
+    val start = startGtid
     // A start in a HIGHER domain than the end is an empty range under the
     // (domain, sequence, serverId) total order — the start >= e check
     // covers it. A start in a LOWER domain (the range spans a failover's
@@ -211,8 +166,7 @@ final class CdcBatch(
     * interpolation is always meaningful within a slice), and each
     * partition filters to its domain while replaying the interleaved
     * log. `startingGtid` must be absent or the matching `v:` form. */
-  private def planBoundedVector(table: String,
-      e: DomainVectorOffset): Array[InputPartition] = {
+  private def planBoundedVector(e: DomainVectorOffset): Array[InputPartition] = {
     val sv = opts.startingGtid match {
       case None => DomainVectorOffset.Start
       case Some(s) if s.startsWith("v:") => DomainVectorOffset.fromJson(s)
@@ -221,31 +175,18 @@ final class CdcBatch(
           s"startingGtid — a bare GTID '$s' says nothing about the other " +
           "domains")
     }
-    val active = e.entries.filter(endD => sv.of(endD.domain).forall(_ < endD))
-    if (active.isEmpty) return Array.empty
-    // the replayPartitions budget is allocated PROPORTIONALLY to each
-    // domain's sequence span, floored at one connection per domain — the
-    // streaming planner's share rule (ADVICE r10: a flat /active.size
-    // split hands a 99%-one-domain backlog half its connection budget
-    // for the near-empty domain)
-    val spans = active.map { endD =>
-      endD.domain -> math.max(1L,
-        endD.sequence - sv.of(endD.domain).map(_.sequence).getOrElse(0L))
-    }.toMap
-    val totalSpan = spans.values.sum.toDouble
-    active.flatMap { endD =>
-      val startD = sv.of(endD.domain)
-      val share = spans(endD.domain) / totalSpan
-      val perDomainN =
-        math.max(1, math.round(opts.replayPartitions * share).toInt)
-      GtidRangeCuts.sequenceCuts(startD, endD, GtidRangeCuts.adaptiveN(
-          startD, endD, perDomainN, opts.catchupSpanPerConnection)).map {
-        case (lo, hi) =>
-          CdcReplayPartition(opts.host, opts.port, opts.user,
-            opts.password, table, fields, lo.map(_.toString), hi.toString,
-            opts.timeoutMs, completeOnQuiet = !opts.endGtidObserved,
-            domainFilter = Some(endD.domain)): InputPartition
-      }
+    // the streaming planner's share rule: connections in proportion to
+    // each domain's span, at least one per domain
+    GtidRangeCuts.domainShares(sv, e, opts.replayPartitions).flatMap {
+      case (startD, endD, n) =>
+        GtidRangeCuts.sequenceCuts(startD, endD, GtidRangeCuts.adaptiveN(
+            startD, endD, n, opts.catchupSpanPerConnection)).map {
+          case (lo, hi) =>
+            CdcReplayPartition(opts.host, opts.port, opts.user,
+              opts.password, table, fields, lo.map(_.toString), hi.toString,
+              opts.timeoutMs, completeOnQuiet = !opts.endGtidObserved,
+              domainFilter = Some(endD.domain)): InputPartition
+        }
     }.toArray
   }
 
@@ -276,9 +217,7 @@ final class CdcBatch(
     * the driver, anchoring at the first quiet moment; the position
     * marks make the parallel cuts EXACT (equal observed-event counts
     * per range, unlike [[planBounded]]'s arithmetic cuts). */
-  private def planReplay(table: String,
-      tailer: CdcTailer): Array[InputPartition] = {
-    val startGtid = startFor(table)
+  private def planReplay(tailer: CdcTailer): Array[InputPartition] = {
     val waitMs = math.max(60000L, 4L * opts.timeoutMs)
     val deadline = System.nanoTime() + waitMs * 1000000L
     val pm = new PosMarks
@@ -317,7 +256,7 @@ final class CdcBatch(
     * here follows the same bound-not-rendezvous semantics as
     * [[planBounded]]: quiet below the bound completes with what
     * exists. */
-  private def planSynthetic(table: String, endBound: Option[Gtid],
+  private def planSynthetic(endBound: Option[Gtid],
       tailer: CdcTailer): Array[InputPartition] = {
     val waitMs = math.max(60000L, 4L * opts.timeoutMs)
     val deadline = System.nanoTime() + waitMs * 1000000L
@@ -341,11 +280,10 @@ final class CdcBatch(
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    if (!multi) {
-      val projection: Array[Int] =
-        if (required == schema) null
-        else required.fields.map(f => schema.fieldIndex(f.name))
-      new CdcPartitionReaderFactory(required, opts.typed, projection, rowPred)
-    } else new TaggedCdcReaderFactory(schema, required, opts.typed, rowPred)
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val projection: Array[Int] =
+      if (required == schema) null
+      else required.fields.map(f => schema.fieldIndex(f.name))
+    new CdcPartitionReaderFactory(required, opts.typed, projection, rowPred)
+  }
 }

@@ -117,10 +117,7 @@ object CdcBootstrap {
     val a = a0.map(_.toString)
     // the probe's schema rides spark.read.schema(...): the snapshot and
     // follow loads open no inference connections of their own
-    val struct =
-      if (opts.normalized)
-        NormalizedCdc.schemaFor(Seq(opts.table -> fields), opts.typed)
-      else SqlTypes.toStructType(fields, opts.typed)
+    val struct = CdcProbe.outputSchema(opts, Seq(opts.table -> fields))
     val snapshot = a match {
       case Some(g) =>
         // the anchor was OBSERVED, so the snapshot range is known to
@@ -163,15 +160,7 @@ object CdcBootstrap {
     // skips it): same-schema for uniform mode, metadata-column
     // validation for normalized mode
     val struct =
-      if (opts.normalized)
-        NormalizedCdc.schemaFor(probed.map { case (t, (f, _)) => t -> f },
-          opts.typed)
-      else {
-        MultiCdc.requireSameSchema(probed.map { case (t, (f, _)) => t -> f })
-        SqlTypes.toStructType(probed.head._2._1, opts.typed)
-          .add(MultiCdc.TableColumn, org.apache.spark.sql.types.StringType,
-            nullable = false)
-      }
+      CdcProbe.outputSchema(opts, probed.map { case (t, (f, _)) => t -> f })
     val as = probed.map { case (t, (_, a)) => t -> a }
     val endComposite = as.map { case (t, a) =>
       s"$t=${a.getOrElse(Gtid.Floor)}"

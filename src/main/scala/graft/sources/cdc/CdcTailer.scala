@@ -443,32 +443,6 @@ final class CdcTailer(
       b.result()
     }
 
-  /** Per-domain parallel cuts of one domain's `(start_d, end_d]` slice
-    * of a vector batch: OBSERVED positions of that domain when the
-    * buffer covers the range (exact balance), else the same
-    * backlog-aware sequence-arithmetic fallback as [[splitRanges]] —
-    * sequences are per-domain, so within one domain the arithmetic is
-    * always meaningful. */
-  def splitDomainRange(domain: Long, start: Option[Gtid], end: Gtid, n: Int,
-      spanPerConnection: Long = GtidRangeCuts.DefaultSpanPerConnection)
-      : Seq[(Option[Gtid], Gtid)] =
-    lock.synchronized {
-      val inRange = positions.iterator
-        .filter(g => g.domain == domain &&
-          start.forall(g > _) && g <= end).toArray
-      if (n <= 1) Seq((start, end))
-      else if (inRange.lastOption.forall(_ != end))
-        GtidRangeCuts.sequenceCuts(start, end,
-          GtidRangeCuts.adaptiveN(start, end, n, spanPerConnection))
-      else if (inRange.length < 2 * n) Seq((start, end))
-      else {
-        val per = math.ceil(inRange.length.toDouble / n).toInt
-        val bounds = inRange.grouped(per).map(_.last).toSeq
-        var lo = start
-        bounds.map { hi => val r = (lo, hi); lo = Some(hi); r }
-      }
-    }
-
   /** Drop per-domain state at or below the committed vector. */
   def trimToVector(committed: Seq[Gtid]): Unit = lock.synchronized {
     val floor = committed.map(g => g.domain -> g).toMap
@@ -493,13 +467,19 @@ final class CdcTailer(
     * guarantee, so `n` is scaled down to one connection per
     * `spanPerConnection` sequence numbers ([[GtidRangeCuts.adaptiveN]])
     * — a shallow catch-up drains serially (measured faster below ~131k
-    * events), a deep one fans out to the full requested parallelism. */
+    * events), a deep one fans out to the full requested parallelism.
+    *
+    * `domain` restricts the split to one domain's `(start_d, end_d]`
+    * slice of a vector batch: only that domain's observed positions
+    * count, and sequences are per-domain, so the arithmetic fallback is
+    * always meaningful within the slice. */
   def splitRanges(start: Option[Gtid], end: Gtid, n: Int,
-      spanPerConnection: Long = GtidRangeCuts.DefaultSpanPerConnection)
-      : Seq[(Option[Gtid], Gtid)] =
+      spanPerConnection: Long = GtidRangeCuts.DefaultSpanPerConnection,
+      domain: Option[Long] = None): Seq[(Option[Gtid], Gtid)] =
     lock.synchronized {
       val inRange = positions.iterator
-        .filter(g => start.forall(g > _) && g <= end).toArray
+        .filter(g => domain.forall(_ == g.domain) &&
+          start.forall(g > _) && g <= end).toArray
       if (n <= 1) Seq((start, end))
       else if (inRange.lastOption.forall(_ != end)) {
         CdcSplitProbe.arithmeticFallbacks += 1

@@ -127,29 +127,18 @@ class DomainVectorMicroBatchStream(schema: StructType, opts: CdcOptions,
     val e = end.asInstanceOf[DomainVectorOffset]
     val t = ensureTailer()
     t.checkFatal()
-    // one slice set per domain that advanced; the replayPartitions
-    // budget is allocated PROPORTIONALLY to each domain's sequence span
-    // (a batch that is 99% one domain should not hand half its
-    // connections to the other), floored at one connection per domain.
+    // one slice set per domain that advanced, sharing replayPartitions
+    // in proportion to each domain's span (GtidRangeCuts.domainShares).
     // Within a domain: observed-position splits when the tailer covers
     // the range, backlog-aware sequence cuts on recovery.
-    val advanced = e.entries.filter(g => s.of(g.domain).forall(g > _))
-    if (advanced.isEmpty) return Array.empty
-    val spans = advanced.map { endD =>
-      endD -> math.max(1L,
-        endD.sequence - s.of(endD.domain).map(_.sequence).getOrElse(0L))
-    }
-    val totalSpan = spans.map(_._2).sum.toDouble
-    advanced.flatMap { endD =>
-      val startD = s.of(endD.domain)
-      val share = spans.find(_._1 == endD).map(_._2).getOrElse(1L) / totalSpan
-      val nD = math.max(1, math.round(opts.replayPartitions * share).toInt)
-      t.splitDomainRange(endD.domain, startD, endD, nD,
-          opts.catchupSpanPerConnection).map { case (lo, hi) =>
-        CdcReplayPartition(opts.host, opts.port, opts.user, opts.password,
-          opts.table, fields, lo.map(_.toString), hi.toString,
-          opts.timeoutMs, domainFilter = Some(endD.domain)): InputPartition
-      }
+    GtidRangeCuts.domainShares(s, e, opts.replayPartitions).flatMap {
+      case (startD, endD, n) =>
+        t.splitRanges(startD, endD, n, opts.catchupSpanPerConnection,
+            domain = Some(endD.domain)).map { case (lo, hi) =>
+          CdcReplayPartition(opts.host, opts.port, opts.user, opts.password,
+            opts.table, fields, lo.map(_.toString), hi.toString,
+            opts.timeoutMs, domainFilter = Some(endD.domain)): InputPartition
+        }
     }.toArray
   }
 

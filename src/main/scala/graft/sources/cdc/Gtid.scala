@@ -47,8 +47,9 @@ object Gtid {
 }
 
 /** Sequence-arithmetic parallel cuts for a named `(start, end]` GTID
-  * range — shared by the bounded batch planner ([[CdcBatch]]) and the
-  * streaming tailer's catch-up fallback ([[CdcTailer.splitRanges]]).
+  * range — shared by the bounded batch planner ([[CdcBatch]], one per
+  * table under [[CompositeCdcBatch]]) and the streaming tailer's
+  * catch-up fallback ([[CdcTailer.splitRanges]]).
   *
   * Cuts are FABRICATED boundary positions at equal sequence spacing:
   * GTID order is `(domain, sequence, serverId)` ([[Gtid]]), so any
@@ -83,6 +84,22 @@ object GtidRangeCuts {
     val span = end.sequence - start.map(_.sequence).getOrElse(0L)
     val bySpan = span / math.max(1L, spanPerConnection)
     math.max(1, math.min(maxN.toLong, bySpan).toInt)
+  }
+
+  /** The domains of `end` that advance past `start`, each with its
+    * share of an `n`-connection replay budget: in proportion to the
+    * domain's sequence span, at least one per domain (a flat split hands
+    * a 99%-one-domain backlog half its connections for the near-empty
+    * domain). Shared by the vector stream and the vector-bounded batch. */
+  def domainShares(start: DomainVectorOffset, end: DomainVectorOffset,
+      n: Int): Seq[(Option[Gtid], Gtid, Int)] = {
+    val advanced = end.entries.filter(e => start.of(e.domain).forall(_ < e))
+    val spans = advanced.map(e =>
+      math.max(1L, e.sequence - start.of(e.domain).map(_.sequence).getOrElse(0L)))
+    val total = spans.sum.toDouble
+    advanced.zip(spans).map { case (e, span) =>
+      (start.of(e.domain), e, math.max(1, math.round(n * (span / total)).toInt))
+    }
   }
 
   /** Up to `n` contiguous subranges of `(start, end]`. Degenerate spans

@@ -8,7 +8,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, ReportsSourceMetrics, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import scala.jdk.CollectionConverters._
@@ -36,7 +36,7 @@ final case class CdcOptions(
     // schemaMode=normalized: heterogeneous tables fan in to one
     // normalized changelog (GTID/event metadata + `payload` JSON +
     // `_table`) instead of requiring one shared schema — the
-    // [[NormalizedPlane]] of [[CompositeCdcMicroBatchStream]]; see
+    // [[NormalizedPlane]] of the composite stream and batch; see
     // [[NormalizedCdc]]
     normalized: Boolean = false,
     // minimum GTID sequence span per fabricated-cut catch-up connection:
@@ -80,6 +80,21 @@ final case class CdcOptions(
         s"maxscale-cdc: composite startingGtid '$s' needs multi-table mode")
       compositeOf(s).of(t)
     case Some(s) => Some(Gtid.parse(s))
+  }
+
+  /** Batch upper bound (inclusive) for one table: the plain `endGtid` of
+    * a single-table read, or table `t`'s entry of the composite
+    * `db.a=0-1-5,db.b=-` form, where a missing or `-` entry anchors at
+    * that table's quiet point. (The single-table batch reads a `v:`
+    * vector bound directly.) */
+  def endFor(t: String): Option[Gtid] = endGtid match {
+    case None => None
+    case Some(s) if allTables.size == 1 => Some(Gtid.parse(s))
+    case Some(s) =>
+      require(s.contains('='),
+        s"maxscale-cdc: multi-table endGtid must use the composite " +
+          s"'db.a=0-1-5,db.b=-' form, got '$s'")
+      compositeOf(s).of(t)
   }
 
   /** Parse a composite per-table GTID line, rejecting entries that name
@@ -223,6 +238,26 @@ private[cdc] object CdcProbe {
       fields
     } finally client.close()
   }
+
+  /** The wire fields of each of `tables`, probed concurrently. */
+  def fieldsByTable(o: CdcOptions,
+      tables: Seq[String]): Seq[(String, Seq[CdcField])] =
+    CdcConcurrent.map(tables)(t => t -> schemaFields(o, t))
+
+  /** The source's output schema from per-table probes: the normalized
+    * changelog shape, one table's own schema, or the shared schema of
+    * several same-schema tables plus `_table` — checked here, at plan
+    * time, not at row decode. */
+  def outputSchema(o: CdcOptions,
+      fieldsByTable: Seq[(String, Seq[CdcField])]): StructType =
+    if (o.normalized) NormalizedCdc.schemaFor(fieldsByTable, o.typed)
+    else if (o.allTables.size == 1)
+      SqlTypes.toStructType(fieldsByTable.head._2, o.typed)
+    else {
+      MultiCdc.requireSameSchema(fieldsByTable)
+      SqlTypes.toStructType(fieldsByTable.head._2, o.typed)
+        .add(MultiCdc.TableColumn, StringType, nullable = false)
+    }
 }
 
 class MaxScaleCdcTableProvider extends TableProvider with DataSourceRegister {
@@ -238,29 +273,9 @@ class MaxScaleCdcTableProvider extends TableProvider with DataSourceRegister {
     * at stream/replay start, as is any genuinely wrong schema). */
   override def supportsExternalMetadata(): Boolean = true
 
-  private def probeSchema(o: CdcOptions, table: String): StructType =
-    SqlTypes.toStructType(CdcProbe.schemaFields(o, table), o.typed)
-
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val o = CdcOptions(options)
-    if (o.normalized)
-      // heterogeneous fan-in: per-table schemas stay free; the output is
-      // the fixed normalized-changelog shape (metadata + payload + _table)
-      NormalizedCdc.schemaFor(
-        CdcConcurrent.map(o.allTables)(t => t -> CdcProbe.schemaFields(o, t)),
-        o.typed)
-    else if (o.allTables.size == 1) probeSchema(o, o.table)
-    else {
-      // multi-table mode: probe concurrently, and every table must share
-      // the base schema (the sharded-upstream shape this mode exists
-      // for) — fail loudly at plan time, not row-decode time
-      val fieldsByTable = CdcConcurrent.map(o.allTables)(t =>
-        t -> CdcProbe.schemaFields(o, t))
-      MultiCdc.requireSameSchema(fieldsByTable)
-      SqlTypes.toStructType(fieldsByTable.head._2, o.typed)
-        .add(MultiCdc.TableColumn, org.apache.spark.sql.types.StringType,
-          nullable = false)
-    }
+    CdcProbe.outputSchema(o, CdcProbe.fieldsByTable(o, o.allTables))
   }
 
   override def getTable(
@@ -309,26 +324,26 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
     * ([[CdcPushdownSupport]]), where they become the identical wire
     * predicate plus a decode-skip mask. */
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (opts.normalized) normalizedScanBuilder()
-    else new ScanBuilder with SupportsPushDownRequiredColumns
+    new ScanBuilder with SupportsPushDownRequiredColumns
         with SupportsPushDownFilters {
       private var required: StructType = schema
       private var pushed: Array[Filter] = Array.empty
 
-      private val multi = opts.allTables.size > 1
-      private val baseSchema =
-        if (multi) StructType(schema.fields.dropRight(1)) else schema
+      /** `tables=` and `schemaMode=normalized` (any table count) read
+        * through the composite stream and batch. */
+      private val composite = opts.normalized || opts.allTables.size > 1
+      private val pushSchema = CompositePlane.pushSchema(schema, opts)
 
-      /** A conjunct is pushable when it compiles against the wire row —
-        * or, in multi-table mode, when it references ONLY `_table` and
-        * compiles against the one-column tag schema (those prune whole
-        * table delegates at plan time). Mixed `_table`+base conjuncts
-        * stay with Spark. */
+      /** A conjunct is pushable when it compiles against the push schema
+        * (see [[CompositePlane.pushSchema]]) — or, in a composite read,
+        * when it references ONLY `_table` and compiles against the
+        * one-column tag schema (those prune whole tables at plan time).
+        * Anything else, e.g. a mixed `_table`+column conjunct or one over
+        * `payload`, stays with Spark. */
       private def pushable(f: Filter): Boolean =
-        if (multi && f.references.contains(MultiCdc.TableColumn))
-          MultiCdc.tableOnly(f) &&
-            CdcWireFilters.compile(f, MultiCdc.TagSchema, typed = true).isDefined
-        else CdcWireFilters.compile(f, baseSchema, opts.typed).isDefined
+        (composite && MultiCdc.tableOnly(f) &&
+          CdcWireFilters.compile(f, MultiCdc.TagSchema, typed = true).isDefined) ||
+          CdcWireFilters.compile(f, pushSchema, opts.typed).isDefined
 
       override def pushFilters(filters: Array[Filter]): Array[Filter] = {
         pushed = filters.filter(pushable)
@@ -353,13 +368,19 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
           * the join keys delivers In()/EqualTo() AFTER planning; they
           * fold into the same wire predicate as static pushdown, so a
           * joined slice skips decoding rows whose keys the other side
-          * already eliminated. Every column is eligible — the wire
-          * compiler keeps what it can translate and the rest is dropped
-          * (under-filtering is always safe: Spark re-applies). */
+          * already eliminated, and a `_table` filter prunes whole tables
+          * at re-plan time (no probe, no connection). Only columns a
+          * runtime filter can act on are advertised — `_table` and the
+          * push schema's: advertising others (notably `payload`) would
+          * invite Spark to build DPP subquery broadcasts that buy
+          * nothing. Under-filtering is always safe: Spark re-applies. */
         @volatile private var runtimeFilters: Array[Filter] = Array.empty
         override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-          required.fields.map(f =>
-            org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
+          required.fields
+            .filter(f => f.name == MultiCdc.TableColumn ||
+              pushSchema.fieldNames.contains(f.name))
+            .map(f =>
+              org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
         override def filter(filters: Array[Filter]): Unit = {
           runtimeFilters = filters
           CdcPushdownProbe.lastBatchRuntimeFilters = filters.map(_.toString).toSeq
@@ -367,14 +388,15 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
         override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
           CdcMetrics.supported
 
-        /** Explicitly-bounded batch slices report a row-count UPPER
+        /** Explicitly-bounded uniform slices report a row-count UPPER
           * bound from the GTID sequence span (a domain's sequence is
           * dense across tables, so a table's slice holds at most
           * span events) — without it Spark assumes defaultSizeInBytes
           * (≈∞) and a small pulled slice can never be broadcast in the
           * pull-and-join pattern. Unbounded/anchor scans stay unknown:
           * a changelog has no cheap cardinality oracle before the
-          * anchor probe runs.
+          * anchor probe runs. Normalized scans stay unknown too: a
+          * payload row's width is not in the schema.
           *
           * Looseness: a table with no explicit start position counts
           * from sequence 0, which is still a correct upper bound (the
@@ -396,10 +418,11 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
             private def satMul(a: Long, b: Long): Long =
               try Math.multiplyExact(a, b)
               catch { case _: ArithmeticException => Long.MaxValue }
-            private val span: Option[Long] = opts.endGtid.flatMap { s =>
-              // vector-bounded pull: sum of per-domain sequence spans
-              // (same upper-bound looseness as the plain form)
-              if (s.startsWith("v:")) {
+            private val span: Option[Long] = opts.endGtid match {
+              case _ if opts.normalized => None
+              case Some(s) if s.startsWith("v:") =>
+                // vector-bounded pull: sum of per-domain sequence spans
+                // (same upper-bound looseness as the plain form)
                 val sv = opts.startingGtid.filter(_.startsWith("v:"))
                   .map(DomainVectorOffset.fromJson)
                   .getOrElse(DomainVectorOffset.Start)
@@ -407,24 +430,16 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
                   .map(e => math.max(0L, e.sequence -
                     sv.of(e.domain).map(_.sequence).getOrElse(0L)))
                   .foldLeft(0L)(satAdd))
-              } else spanNonVector(s)
-            }
-            private def spanNonVector(s: String): Option[Long] = {
-              // parse the composite once, not once per table
-              val comp =
-                if (s.contains('=')) Some(opts.compositeOf(s)) else None
-              val plain = if (comp.isEmpty) Some(Gtid.parse(s)) else None
-              val spans = opts.allTables.map { t =>
-                val end = comp.map(_.of(t)).getOrElse(plain)
-                end.map(e =>
-                  math.max(0L, e.sequence -
-                    opts.startFor(t).map(_.sequence).getOrElse(0L)))
-              }
-              // every table must be explicitly bounded for the total to
-              // be an upper bound (an anchor-at-quiet entry is unknown)
-              if (spans.forall(_.isDefined))
-                Some(spans.flatten.foldLeft(0L)(satAdd))
-              else None
+              case Some(_) =>
+                val spans = opts.allTables.map(t => opts.endFor(t).map(e =>
+                  math.max(0L,
+                    e.sequence - opts.startFor(t).map(_.sequence).getOrElse(0L))))
+                // every table must be explicitly bounded for the total to
+                // be an upper bound (an anchor-at-quiet entry is unknown)
+                if (spans.forall(_.isDefined))
+                  Some(spans.flatten.foldLeft(0L)(satAdd))
+                else None
+              case None => None
             }
             override def numRows(): java.util.OptionalLong =
               span.map(java.util.OptionalLong.of)
@@ -438,7 +453,7 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
           require(opts.endGtid.isEmpty,
             "maxscale-cdc: endGtid is a batch-read option; bound a stream " +
               "with Trigger.AvailableNow instead")
-          if (multi)
+          if (composite)
             new CompositeCdcMicroBatchStream(schema, required, opts,
               checkpointLocation, pushed)
           else if (opts.domainVector)
@@ -452,79 +467,9 @@ class MaxScaleCdcTable(schema: StructType, opts: CdcOptions)
         // the batch planner drives pruneColumns/pushFilters natively
         // here, so `required`/`pushed` arrive via the standard contract
         override def toBatch(): org.apache.spark.sql.connector.read.Batch =
-          new CdcBatch(schema, required, opts, pushed, () => runtimeFilters)
-      }
-    }
-
-  /** ScanBuilder for `schemaMode=normalized` ([[NormalizedCdc]]). The
-    * pushable set here is structural, not per-table: `_table`-only
-    * conjuncts prune whole table delegates; metadata-only conjuncts are
-    * recompiled per table inside the stream (wire positions differ
-    * between heterogeneous schemas). `payload` conjuncts stay with
-    * Spark entirely. All filters remain residual. */
-  private def normalizedScanBuilder(): ScanBuilder =
-    new ScanBuilder with SupportsPushDownRequiredColumns
-        with SupportsPushDownFilters {
-      private var required: StructType = schema
-      private var pushed: Array[Filter] = Array.empty
-      private val metaSchema =
-        StructType(schema.fields.filter(f => NormalizedCdc.Meta.contains(f.name)))
-
-      private def pushable(f: Filter): Boolean =
-        if (MultiCdc.tableOnly(f))
-          CdcWireFilters.compile(f, MultiCdc.TagSchema, typed = true).isDefined
-        else f.references.forall(NormalizedCdc.Meta.contains) &&
-          CdcWireFilters.compile(f, metaSchema, opts.typed).isDefined
-
-      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-        pushed = filters.filter(pushable)
-        CdcPushdownProbe.lastSeen = filters.map(_.toString).toSeq
-        CdcPushdownProbe.lastPushed = pushed.map(_.toString).toSeq
-        filters // all residual — Spark re-applies
-      }
-      override def pushedFilters(): Array[Filter] = pushed
-
-      override def pruneColumns(requiredSchema: StructType): Unit =
-        required =
-          if (requiredSchema.fields.isEmpty) StructType(schema.fields.take(1))
-          else requiredSchema
-
-      override def build(): Scan = new Scan
-          with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
-        override def readSchema(): StructType = required
-
-        /** Runtime filtering mirrors the uniform batch scan; the
-          * high-value case here is a DPP-style In()/EqualTo() over
-          * `_table`, which prunes whole tables at re-plan time (no
-          * probe, no connection). Metadata-column filters compile per
-          * table inside the batch planner. ONLY those columns are
-          * advertised: the batch silently drops runtime filters over
-          * anything else (notably `payload`), so advertising them would
-          * invite Spark to build DPP subquery broadcasts that buy
-          * nothing. */
-        @volatile private var runtimeFilters: Array[Filter] = Array.empty
-        override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-          required.fields
-            .filter(f => f.name == MultiCdc.TableColumn ||
-              NormalizedCdc.Meta.contains(f.name))
-            .map(f =>
-              org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
-        override def filter(filters: Array[Filter]): Unit = {
-          runtimeFilters = filters
-          CdcPushdownProbe.lastBatchRuntimeFilters = filters.map(_.toString).toSeq
-        }
-
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-          require(opts.endGtid.isEmpty,
-            "maxscale-cdc: endGtid is a batch-read option; bound a stream " +
-              "with Trigger.AvailableNow instead")
-          new CompositeCdcMicroBatchStream(schema, required, opts,
-            checkpointLocation, pushed)
-        }
-        // one-shot normalized pull — the batch twin of the normalized
-        // stream (whole-database bootstrap in one DataFrame)
-        override def toBatch(): org.apache.spark.sql.connector.read.Batch =
-          new NormalizedCdcBatch(required, opts, pushed, () => runtimeFilters)
+          if (composite)
+            new CompositeCdcBatch(schema, required, opts, pushed, () => runtimeFilters)
+          else new CdcBatch(schema, required, opts, pushed, () => runtimeFilters)
       }
     }
 }

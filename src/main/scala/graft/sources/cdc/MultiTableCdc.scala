@@ -3,7 +3,7 @@ package graft.sources.cdc
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,6 +30,10 @@ object MultiCdc {
     * time instead of filtering rows. */
   private[cdc] def tableOnly(f: Filter): Boolean =
     f.references.forall(_ == TableColumn)
+
+  /** The `_table`-only conjuncts of `fs`, compiled (null = none). */
+  private[cdc] def tablePred(fs: Seq[Filter]): WirePred =
+    CdcWireFilters.compileAll(fs.filter(tableOnly), TagSchema, typed = true)
 
   /** Whether a compiled `_table` predicate (null = none) admits `t`. */
   private[cdc] def admits(pred: WirePred, t: String): Boolean =
@@ -130,15 +134,10 @@ class CompositeCdcMicroBatchStream(
 
   private val tables = opts.allTables
   private val vector = opts.domainVector
-  private val plane: CompositePlane =
-    if (opts.normalized) new NormalizedPlane(schema, required, opts)
-    else new UniformPlane(schema, required, opts.typed)
+  private val plane = CompositePlane(schema, required, opts)
 
-  private val (tableConjuncts, rowConjuncts) =
-    pushed.toSeq.partition(MultiCdc.tableOnly)
-  private val tablePred: WirePred =
-    CdcWireFilters.compileAll(tableConjuncts, MultiCdc.TagSchema, typed = true)
-  private val staticRowFilters = plane.rowFilters(rowConjuncts)
+  private val tablePred: WirePred = MultiCdc.tablePred(pushed.toSeq)
+  private val staticRowFilters = plane.rowFilters(pushed.toSeq)
 
   /** Runtime pushdown (the operative path — see CdcStreamingPushdown),
     * split exactly like the static conjuncts. All advisory: a raced
@@ -150,10 +149,8 @@ class CompositeCdcMicroBatchStream(
       filters: Seq[Filter], referenced: Option[Set[String]]): Unit = {
     CdcPushdownProbe.lastRuntimeFilters = filters.map(_.toString)
     CdcPushdownProbe.lastRuntimeReferenced = referenced
-    val (tf, rf) = filters.partition(MultiCdc.tableOnly)
-    runtimeTablePred =
-      CdcWireFilters.compileAll(tf, MultiCdc.TagSchema, typed = true)
-    runtimeRowFilters = plane.rowFilters(rf)
+    runtimeTablePred = MultiCdc.tablePred(filters)
+    runtimeRowFilters = plane.rowFilters(filters)
     runtimeReferenced = referenced
   }
 
@@ -164,6 +161,10 @@ class CompositeCdcMicroBatchStream(
     * URL-encoded so `db.table` never introduces path separators. */
   private def subCheckpoint(t: String): String =
     checkpointLocation + "/table-" + java.net.URLEncoder.encode(t, "UTF-8")
+
+  // a stream serves every table from its first batch on: probe them all
+  // now (normalized), so schema drift fails the query at start
+  plane.prepare(tables)
 
   private val streams: Seq[(String, CdcTableStream)] = tables.map { t =>
     val (wire, req) = plane.delegateSchema(t)
@@ -251,18 +252,109 @@ class CompositeCdcMicroBatchStream(
   }
 }
 
-/** What `schemaMode` changes in a composite stream: the schema each
-  * table's delegate decodes, which non-`_table` conjuncts reach the
-  * wire, and the reader factory that turns tagged partitions into
-  * output rows. */
-private[cdc] sealed trait CompositePlane {
+/** `spark.read` over the composite modes — `tables=` and
+  * `schemaMode=normalized`, any table count — the batch twin of
+  * [[CompositeCdcMicroBatchStream]] over the same [[CompositePlane]].
+  *
+  * Each table that survives `_table` pruning plans through its own
+  * single-table [[CdcBatch]] with its own anchor, so every batch-planning
+  * behavior is inherited: anchor-at-quiet or bounded ranges,
+  * zero-driver-I/O sequence cuts for explicit bounds, parallel
+  * executor-side replay. Partitions come back tagged with their table
+  * ([[TaggedCdcPartition]]) for the plane's reader factory, which adds
+  * `_table` (uniform) or builds the normalized row. Pushed `_table`-only
+  * conjuncts, static or runtime, prune whole tables at plan time — an
+  * excluded table gets no probe and no connection. `endGtid` takes the
+  * composite `db.a=0-1-5,db.b=-` form when several tables are subscribed
+  * (entries optional; `-` or absence means anchor-at-quiet for that
+  * table). The whole-database bootstrap this serves: snapshot every
+  * table's history as one DataFrame, then follow with the stream from
+  * the same per-table anchors ([[CdcBootstrap]]).
+  */
+final class CompositeCdcBatch(
+    schema: StructType, required: StructType, opts: CdcOptions,
+    pushed: Array[Filter], runtime: () => Array[Filter]) extends Batch {
+
+  private val plane = CompositePlane(schema, required, opts)
+  private val tablePred: WirePred = MultiCdc.tablePred(pushed.toSeq)
+  private val staticRowFilters = plane.rowFilters(pushed.toSeq)
+
+  /** Tables that survive static and runtime `_table` pruning — re-read
+    * per call: BatchScanExec re-plans partitions after `filter()` fires. */
+  private def liveTables: Seq[String] = {
+    val rt = MultiCdc.tablePred(runtime().toSeq)
+    opts.allTables.filter(t =>
+      MultiCdc.admits(tablePred, t) && MultiCdc.admits(rt, t))
+  }
+
+  /** Per-table upper bounds, resolved once. */
+  private lazy val ends: Map[String, Option[Gtid]] =
+    opts.allTables.map(t => t -> opts.endFor(t)).toMap
+
+  /** Table `t`'s planner: plain per-table bounds, and the runtime row
+    * conjuncts compiled against ITS wire schema (they ride the
+    * partitions, [[RuntimeFilteredCdcPartition]]). */
+  private def delegate(t: String): CdcBatch = {
+    val (wire, req) = plane.delegateSchema(t)
+    new CdcBatch(wire, req,
+      opts.copy(table = t, tables = Seq.empty,
+        startingGtid = opts.startFor(t).map(_.toString),
+        endGtid = ends(t).map(_.toString)),
+      pushed = Array.empty,
+      runtime = () => plane.rowFilters(runtime().toSeq).toArray)
+  }
+
+  override def planInputPartitions(): Array[InputPartition] = {
+    val live = liveTables
+    plane.prepare(live)
+    val delegates = live.map(t => t -> delegate(t))
+    CdcConcurrent.map(delegates) { case (t, d) =>
+      d.planInputPartitions().map(p => TaggedCdcPartition(p, t): InputPartition)
+    }.flatten.toArray
+  }
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    plane.prepare(liveTables)
+    plane.readerFactory(staticRowFilters, Nil, None)
+  }
+}
+
+/** What `schemaMode` changes in a composite read, stream or batch: the
+  * columns a non-`_table` conjunct may reference to reach the wire, the
+  * schema each table's delegate decodes, and the reader factory that
+  * turns tagged partitions into output rows. */
+private[cdc] sealed abstract class CompositePlane(schema: StructType,
+    opts: CdcOptions) {
+  /** What a non-`_table` conjunct compiles against to reach the wire. */
+  val pushSchema: StructType = CompositePlane.pushSchema(schema, opts)
+  private val pushColumns = pushSchema.fieldNames.toSet
+
+  /** Get ready to serve `tables`; called before their delegates exist. */
+  def prepare(tables: Seq[String]): Unit = ()
   /** (wire schema, pruned schema) of table `t`'s delegate. */
   def delegateSchema(t: String): (StructType, StructType)
-  /** The non-`_table` conjuncts this plane compiles into the wire
-    * predicate (the rest stay with Spark — every filter is residual). */
-  def rowFilters(fs: Seq[Filter]): Seq[Filter]
+  /** The conjuncts of `fs` this plane compiles into the wire predicate
+    * (the rest stay with Spark — every filter is residual). */
+  def rowFilters(fs: Seq[Filter]): Seq[Filter] =
+    fs.filter(f => !MultiCdc.tableOnly(f) && f.references.forall(pushColumns))
   def readerFactory(static: Seq[Filter], runtime: Seq[Filter],
       referenced: Option[Set[String]]): PartitionReaderFactory
+}
+
+private[cdc] object CompositePlane {
+  def apply(schema: StructType, required: StructType,
+      opts: CdcOptions): CompositePlane =
+    if (opts.normalized) new NormalizedPlane(schema, required, opts)
+    else new UniformPlane(schema, required, opts)
+
+  /** The schema a non-`_table` conjunct must compile against to be
+    * pushed: the whole schema for a single table, the shared base schema
+    * for uniform `tables=`, the six metadata columns for normalized. */
+  def pushSchema(schema: StructType, opts: CdcOptions): StructType =
+    if (opts.normalized)
+      StructType(schema.fields.filter(f => NormalizedCdc.Meta.contains(f.name)))
+    else if (opts.allTables.size > 1) StructType(schema.fields.dropRight(1))
+    else schema
 }
 
 /** `schemaMode=uniform`: every table shares one base schema (checked at
@@ -270,16 +362,13 @@ private[cdc] sealed trait CompositePlane {
   * mask serve all tables, and [[TaggedCdcReaderFactory]] appends
   * `_table`. Opens no connection of its own. */
 private[cdc] final class UniformPlane(schema: StructType, required: StructType,
-    typed: Boolean) extends CompositePlane {
+    opts: CdcOptions) extends CompositePlane(schema, opts) {
   require(schema.fields.lastOption.exists(_.name == MultiCdc.TableColumn),
     s"multi-table schema must end in the ${MultiCdc.TableColumn} column")
-  private val baseSchema = StructType(schema.fields.dropRight(1))
   private val baseRequired = TaggedCdcReaderFactory.baseRequired(schema, required)
 
   def delegateSchema(t: String): (StructType, StructType) =
-    (baseSchema, baseRequired)
-  def rowFilters(fs: Seq[Filter]): Seq[Filter] =
-    fs.filterNot(_.references.contains(MultiCdc.TableColumn))
+    (pushSchema, baseRequired)
   def readerFactory(static: Seq[Filter], runtime: Seq[Filter],
       referenced: Option[Set[String]]): PartitionReaderFactory = {
     val mask = referenced match {
@@ -287,50 +376,55 @@ private[cdc] final class UniformPlane(schema: StructType, required: StructType,
         baseRequired.fields.map(f => refs.contains(f.name))
       case _ => null
     }
-    new TaggedCdcReaderFactory(schema, required, typed,
-      WirePred.and(CdcWireFilters.compileAll(static, baseSchema, typed),
-        CdcWireFilters.compileAll(runtime, baseSchema, typed)), mask)
+    new TaggedCdcReaderFactory(schema, required, opts.typed,
+      CdcWireFilters.compileAll(static ++ runtime, pushSchema, opts.typed), mask)
   }
 }
 
 /** `schemaMode=normalized` ([[NormalizedCdc]]): heterogeneous tables,
   * so each delegate decodes its table's own wire schema and metadata
   * conjuncts compile per table. The output schema cannot carry N wire
-  * schemas, so the plane re-probes each table (one connection per
-  * table, concurrent — the same cost as planning-time inference) and
-  * fails loudly on drift against the planning schema, the single-table
-  * restart contract. */
+  * schemas, so the plane probes each table it is asked to serve (one
+  * connection per table, concurrent, once — the same cost as
+  * planning-time inference; a table `_table` pruning excluded is never
+  * probed) and fails loudly on drift against the planning schema, the
+  * single-table restart contract. */
 private[cdc] final class NormalizedPlane(schema: StructType,
-    required: StructType, opts: CdcOptions) extends CompositePlane {
-  private val fieldsByTable: Seq[(String, Seq[CdcField])] =
-    CdcConcurrent.map(opts.allTables)(t => t -> CdcProbe.schemaFields(opts, t))
-  locally {
-    val now = NormalizedCdc.schemaFor(fieldsByTable, opts.typed)
-    def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-    if (shape(now) != shape(schema)) throw new CdcProtocolException(
-      s"schema drift between planning and stream start: normalized schema " +
-        s"was ${shape(schema)}, probes now give ${shape(now)} — restart " +
-        "the query")
-  }
-  private val wireStructs: Map[String, StructType] = fieldsByTable.map {
-    case (t, fs) => t -> SqlTypes.toStructType(fs, opts.typed)
-  }.toMap
+    required: StructType, opts: CdcOptions) extends CompositePlane(schema, opts) {
+  /** Probed tables: wire fields and their struct. */
+  @volatile private var probed = Map.empty[String, (Seq[CdcField], StructType)]
 
-  def delegateSchema(t: String): (StructType, StructType) =
-    (wireStructs(t), wireStructs(t))
-  def rowFilters(fs: Seq[Filter]): Seq[Filter] =
-    fs.filter(_.references.forall(NormalizedCdc.Meta.contains))
+  override def prepare(tables: Seq[String]): Unit = synchronized {
+    val fresh = tables.filterNot(probed.contains)
+    if (fresh.nonEmpty) {
+      val got = CdcProbe.fieldsByTable(opts, fresh)
+      val now = NormalizedCdc.schemaFor(got, opts.typed)
+      def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
+      if (shape(now) != shape(schema)) throw new CdcProtocolException(
+        s"schema drift between planning and read start: normalized schema " +
+          s"was ${shape(schema)}, probes now give ${shape(now)} — restart " +
+          "the query")
+      probed ++= got.map { case (t, fs) =>
+        t -> (fs, SqlTypes.toStructType(fs, opts.typed))
+      }
+    }
+  }
+
+  def delegateSchema(t: String): (StructType, StructType) = {
+    val wire = probed(t)._2
+    (wire, wire)
+  }
   def readerFactory(static: Seq[Filter], runtime: Seq[Filter],
-      referenced: Option[Set[String]]): PartitionReaderFactory =
+      referenced: Option[Set[String]]): PartitionReaderFactory = {
+    val tables = probed
     new NormalizedCdcReaderFactory(
-      fieldsByTable.map { case (t, fs) =>
+      tables.map { case (t, (fs, _)) =>
         t -> WireNormalizer(t, fs, opts.typed, required)
-      }.toMap,
-      fieldsByTable.map { case (t, _) =>
-        t -> WirePred.and(
-          CdcWireFilters.compileAll(static, wireStructs(t), opts.typed),
-          CdcWireFilters.compileAll(runtime, wireStructs(t), opts.typed))
-      }.filter(_._2 != null).toMap)
+      },
+      tables.map { case (t, (_, wire)) =>
+        t -> CdcWireFilters.compileAll(static ++ runtime, wire, opts.typed)
+      }.filter(_._2 != null))
+  }
 }
 
 /** A single-table partition plus the table it came from. */

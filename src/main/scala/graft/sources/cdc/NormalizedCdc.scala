@@ -28,11 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `get_json_object`/`from_json` after routing on `_table` — the
   * standard normalized-changelog consumption pattern.
   *
-  * The stream is the one [[CompositeCdcMicroBatchStream]] with the
-  * [[NormalizedPlane]] data plane, so everything operational is shared
-  * with uniform mode: one checkpoint, one composite offset line, per-table
-  * committed-GTID watermarks, per-table admission-control split,
-  * Trigger.AvailableNow per-table anchors, `_table`-pushdown table
+  * The stream is the one [[CompositeCdcMicroBatchStream]] and the batch
+  * read the one [[CompositeCdcBatch]], both with the [[NormalizedPlane]]
+  * data plane, so everything operational is shared with uniform mode:
+  * one checkpoint, one composite offset line, per-table committed-GTID
+  * watermarks, per-table admission-control split, Trigger.AvailableNow
+  * per-table anchors, composite `endGtid` bounds, `_table`-pushdown table
   * pruning, and executor-side GTID-range replay (the data plane never
   * touches the driver). Payload encoding happens executor-side in the
   * replay readers.
@@ -316,8 +317,8 @@ final case class WireNormalizer(
   * wire predicates (metadata-column conjuncts compiled against each
   * table's own schema) drop rows before any payload is built. Runtime
   * filters (batch DPP) arrive riding the partition
-  * ([[RuntimeFilteredCdcPartition]], compiled per table by the inner
-  * planner) and AND into the static predicate. */
+  * ([[RuntimeFilteredCdcPartition]], compiled per table by the table's
+  * [[CdcBatch]]) and AND into the static predicate. */
 class NormalizedCdcReaderFactory(
     normalizers: Map[String, WireNormalizer],
     preds: Map[String, WirePred]) extends PartitionReaderFactory {
@@ -334,130 +335,4 @@ class NormalizedCdcReaderFactory(
       case other => throw new IllegalArgumentException(
         s"unexpected partition type ${other.getClass}")
     }
-}
-
-/** Bounded one-shot pull of N heterogeneous tables into the normalized
-  * changelog shape — the batch twin of the normalized
-  * [[CompositeCdcMicroBatchStream]]
-  * (`spark.read.format("maxscale-cdc").option("schemaMode",
-  * "normalized")`), completing the {uniform, normalized} × {batch,
-  * stream} matrix. The bootstrap story this serves: snapshot a whole
-  * database's history as ONE DataFrame, then follow with the normalized
-  * stream from the same per-table anchors.
-  *
-  * Planning delegates to one single-table [[CdcBatch]] per included
-  * table, so every batch-planning behavior is inherited: anchor-at-quiet
-  * or composite-`endGtid` bounds, zero-driver-I/O sequence-cut slices
-  * for explicit bounds, bounded position sampling otherwise, parallel
-  * executor-side replay. Partitions come back tagged with their table
-  * and materialize through its [[WireNormalizer]].
-  *
-  * Filter routing matches the streaming twin: `_table`-only conjuncts
-  * (static or runtime) prune whole tables at plan time — an excluded
-  * table gets no probe connection and no replay; metadata-only conjuncts
-  * compile per table against its own wire schema and drop rows before
-  * payload encoding; `payload` conjuncts stay with Spark.
-  */
-final class NormalizedCdcBatch(
-    required: StructType,
-    opts: CdcOptions,
-    pushed: Array[org.apache.spark.sql.sources.Filter],
-    runtime: () => Array[org.apache.spark.sql.sources.Filter] = () => Array.empty)
-    extends org.apache.spark.sql.connector.read.Batch {
-
-  private val tables = opts.allTables
-  private val multi = tables.size > 1
-
-  /** One schema probe per table, concurrent — deferred to first
-    * planning so `_table` pruning can exclude a table before it is
-    * ever probed. Frozen at first access: runtime filters arriving
-    * later only ever NARROW the set, so this is a superset and
-    * [[planInputPartitions]] re-filters per plan. */
-  private lazy val fieldsByTable: Seq[(String, Seq[CdcField])] = {
-    val included = tables.filter(this.included)
-    val probed = CdcConcurrent.map(included)(t => t -> CdcProbe.schemaFields(opts, t))
-    NormalizedCdc.validate(probed)
-    probed
-  }
-  private lazy val wireStructs: Map[String, StructType] = fieldsByTable.map {
-    case (t, fs) => t -> SqlTypes.toStructType(fs, opts.typed)
-  }.toMap
-
-  private val (tableConjuncts, restConjuncts) =
-    pushed.partition(MultiCdc.tableOnly)
-  private val metaConjuncts = restConjuncts.filter(
-    _.references.forall(NormalizedCdc.Meta.contains))
-  private val tablePred: WirePred = CdcWireFilters.compileAll(
-    tableConjuncts.toSeq, MultiCdc.TagSchema, typed = true)
-
-  private def runtimeMetaConjuncts =
-    runtime().filter(f => !MultiCdc.tableOnly(f) &&
-      f.references.forall(NormalizedCdc.Meta.contains))
-
-  /** Runtime `_table` predicate, compiled once per distinct filter()
-    * delivery (runtime filters only ever arrive a handful of times per
-    * query, but included() runs per table per re-plan). */
-  private var rtPredFor: Seq[org.apache.spark.sql.sources.Filter] = null
-  private var rtPred: WirePred = null
-  private def runtimeTablePred: WirePred = synchronized {
-    val tf = runtime().filter(MultiCdc.tableOnly).toSeq
-    if (tf != rtPredFor) {
-      rtPredFor = tf
-      rtPred = CdcWireFilters.compileAll(tf, MultiCdc.TagSchema, typed = true)
-    }
-    rtPred
-  }
-
-  private def included(t: String): Boolean =
-    MultiCdc.admits(tablePred, t) && MultiCdc.admits(runtimeTablePred, t)
-
-  /** Parsed (and table-validated) composite endGtid, once — `endFor`
-    * runs per table (the same memoization as [[CdcBatch.endComposite]],
-    * so the two batch planners' bound semantics stay aligned). */
-  private lazy val endComposite: Option[MultiGtidOffset] =
-    opts.endGtid.filter(_ => multi).map { s =>
-      require(s.contains('='),
-        s"maxscale-cdc: multi-table endGtid must use the composite " +
-          s"'db.a=0-1-5,db.b=-' form, got '$s'")
-      opts.compositeOf(s)
-    }
-
-  private def endFor(t: String): Option[Gtid] = opts.endGtid match {
-    case None => None
-    case Some(s) if !multi => Some(Gtid.parse(s))
-    case Some(_) => endComposite.flatMap(_.of(t))
-  }
-
-  /** Single-table planner for one table: the inner batch sees plain
-    * per-table bounds (resolved here from the composite forms) and
-    * compiles runtime metadata conjuncts against ITS wire schema, so
-    * the riding partition predicates are already per-table. */
-  private def innerFor(t: String): CdcBatch =
-    // normalized stays TRUE: the inner planner's probe tailers then
-    // tolerate mid-stream re-schema (payload rows are schema-free)
-    new CdcBatch(wireStructs(t), wireStructs(t),
-      opts.copy(table = t, tables = Seq.empty,
-        startingGtid = opts.startFor(t).map(_.toString),
-        endGtid = endFor(t).map(_.toString)),
-      pushed = Array.empty,
-      runtime = () => runtimeMetaConjuncts)
-
-  override def planInputPartitions(): Array[InputPartition] =
-    // re-filter on every plan: BatchScanExec re-plans partitions after a
-    // runtime filter() fires, and a `_table` DPP filter must prune the
-    // delegate HERE (fieldsByTable froze the static superset)
-    CdcConcurrent.map(fieldsByTable.map(_._1).filter(included)) { t =>
-      innerFor(t).planInputPartitions()
-        .map(p => TaggedCdcPartition(p, t): InputPartition)
-    }.flatten.toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NormalizedCdcReaderFactory(
-      fieldsByTable.map { case (t, fs) =>
-        t -> WireNormalizer(t, fs, opts.typed, required)
-      }.toMap,
-      fieldsByTable.map { case (t, _) =>
-        t -> CdcWireFilters.compileAll(
-          metaConjuncts.toSeq, wireStructs(t), opts.typed)
-      }.filter(_._2 != null).toMap)
 }

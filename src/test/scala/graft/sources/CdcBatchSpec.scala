@@ -174,6 +174,48 @@ class CdcBatchSpec extends SparkSpec {
     } finally srv.close()
   }
 
+  test("multi-table batch: a post-planning `_table` filter() prunes the " +
+      "other table at the re-plan — no probe, no replay") {
+    val schemas = Map("db.a" -> Schema, "db.b" -> Schema)
+    val srv = new MockMaxScaleServer(Schema, Nil, tableSchemas = schemas)
+    try {
+      (1L to 5L).foreach(i => srv.pushTo("db.a", event(i, "insert", i.toInt, s"a$i")))
+      (1L to 3L).foreach(i => srv.pushTo("db.b", event(i, "insert", i.toInt, s"b$i")))
+      val df = spark.read.format("maxscale-cdc")
+        .option("host", "127.0.0.1").option("port", srv.port)
+        .option("user", "u").option("password", "p")
+        .option("tables", "db.a,db.b")
+        .option("timeoutSeconds", 1)
+        .load()
+      val scanExec = df.queryExecution.executedPlan.collectLeaves().head
+        .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
+      val scan = scanExec.scan
+        .asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
+      assert(scan.filterAttributes().map(_.describe()).contains("_table"))
+      // what a DPP subquery delivers after the other join side evaluates;
+      // BatchScanExec then re-plans partitions on the SAME batch
+      scan.filter(Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.EqualTo("_table", "db.a")))
+      val batch = scan.toBatch()
+      val before = srv.requestCount("db.b")
+      val parts = batch.planInputPartitions()
+      val factory = batch.createReaderFactory()
+      val tableIdx = df.schema.fieldIndex("_table")
+      val seqIdx = df.schema.fieldIndex("sequence")
+      val got = scala.collection.mutable.Set[(String, Int)]()
+      parts.foreach { p =>
+        val r = factory.createReader(p)
+        try while (r.next()) {
+          val row = r.get()
+          got += ((row.getUTF8String(tableIdx).toString, row.getInt(seqIdx)))
+        } finally r.close()
+      }
+      assert(got == (1 to 5).map(i => ("db.a", i)).toSet, s"got $got")
+      assert(srv.requestCount("db.b") == before,
+        "runtime-pruned table was still probed/replayed")
+    } finally srv.close()
+  }
+
   test("multi-table composite endGtid bounds one table and anchors the other") {
     val schemas = Map("db.a" -> Schema, "db.b" -> Schema)
     val srv = new MockMaxScaleServer(Schema, Nil, tableSchemas = schemas)
