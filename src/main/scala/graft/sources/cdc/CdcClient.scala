@@ -145,14 +145,26 @@ object CdcClient {
     * arrays/objects degrade to "" like the reference's default branch. */
   def scalarToString(v: JsonNode): String =
     if (v.isTextual) v.asText()
-    else if (v.isIntegralNumber) v.asLong().toString
-    else if (v.isFloatingPointNumber) {
-      val d = v.asDouble()
-      if (d == d.toLong.toDouble && math.abs(d) < 1e15) d.toLong.toString else d.toString
+    else if (v.isIntegralNumber) {
+      // integers beyond Long (bigint unsigned above 2^63-1) exactly
+      if (v.canConvertToLong) v.asLong().toString else v.bigIntegerValue.toString
     }
+    else if (v.isFloatingPointNumber) doubleText(v.asDouble())
     else if (v.isBoolean) { if (v.asBoolean()) "true" else "false" }
     else if (v.isNull) null
     else ""
+
+  /** Wire text of a JSON real: integral values below 1e15 print without
+    * a fraction, everything else as `Double.toString`. */
+  def doubleText(d: Double): String =
+    if (d == d.toLong.toDouble && math.abs(d) < 1e15) d.toLong.toString else d.toString
+
+  /** JSON_ALLOW_NUL parity (reference cdc_connector.cpp:335): the server
+    * may embed raw control chars / NULs inside string values. Shared by
+    * every client (a configured mapper is thread-safe). */
+  private[sources] val Json = com.fasterxml.jackson.databind.json.JsonMapper.builder()
+    .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .build()
 }
 
 /** Blocking MaxScale-CDC wire client: the Spark-side twin of the
@@ -174,11 +186,6 @@ final class CdcClient(
 
   import CdcClient._
 
-  /** JSON_ALLOW_NUL parity (reference cdc_connector.cpp:335): the server
-    * may embed raw control chars / NULs inside string values. */
-  private val mapper = com.fasterxml.jackson.databind.json.JsonMapper.builder()
-    .enable(com.fasterxml.jackson.core.json.JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
-    .build()
   private var socket: Socket = _
   private var in: InputStream = _
   private var out: OutputStream = _
@@ -229,7 +236,15 @@ final class CdcClient(
     * decoded and adopted (and surfaced to the caller — unlike the
     * reference's silent recursion, so the source can fail fast on
     * mid-stream re-schema, SURVEY.md §1.3). */
-  def readMessage(): CdcMessage = readLineSlice() match {
+  def readMessage(): CdcMessage = readMessage(null)
+
+  /** [[readMessage]] for the replay hot path: a data row that `dec` (a
+    * [[CdcRowDecoder]] compiled for the current schema) takes is decoded
+    * straight from the buffer slice into `dec`, and `null` is returned;
+    * every other line, including rows `dec` declines, yields exactly the
+    * message [[readMessage]] returns. A decoder compiled for another
+    * schema version is ignored. */
+  private[cdc] def readMessage(dec: CdcRowDecoder): CdcMessage = readLineSlice() match {
     case -1 => if (bufEnd > bufStart && looksLikeErr(pending)) {
         // MaxScale quirk: ERR payloads may lack the trailing newline
         // (reference is_error workaround, cdc_connector.cpp:445-457).
@@ -239,13 +254,15 @@ final class CdcClient(
       } else if (eofSeen) CdcClosed // dead connection + partial line ≠ quiet stream
       else CdcTimeout
     case -2 => CdcClosed
-    case 0 => readMessage()
+    case 0 => readMessage(dec)
     case len =>
       if (len >= 3 &&
           (buf(lineOff) == 'E' || buf(lineOff) == 'e') &&
           (buf(lineOff + 1) == 'R' || buf(lineOff + 1) == 'r') &&
           (buf(lineOff + 2) == 'R' || buf(lineOff + 2) == 'r'))
         throw new CdcProtocolException(new String(buf, lineOff, len, UTF_8))
+      else if (dec != null && (dec.wire eq schemaFields) &&
+          dec.decode(Json.createParser(buf, lineOff, len))) null
       else {
         // hot loop decodes straight from the buffer slice; the String
         // materializes only on the slow paths below
@@ -258,7 +275,7 @@ final class CdcClient(
           // tree walk is the semantics of record; the fast path only
           // handles what it can reproduce bit-for-bit
           val node =
-            try mapper.readTree(line)
+            try Json.readTree(line)
             catch { case e: Exception =>
               throw new CdcProtocolException(s"malformed JSON event: ${e.getMessage}")
             }
@@ -296,7 +313,7 @@ final class CdcClient(
     val nulls = new Array[Boolean](n)
     val seen = new Array[Boolean](n)
     var filled = 0
-    val p = mapper.createParser(b, off, len)
+    val p = Json.createParser(b, off, len)
     try {
       if (p.nextToken() != START_OBJECT) return null
       var tok = p.nextToken()
@@ -310,10 +327,7 @@ final class CdcClient(
           val s = vt match {
             case VALUE_STRING => p.getText
             case VALUE_NUMBER_INT => p.getLongValue.toString
-            case VALUE_NUMBER_FLOAT =>
-              val d = p.getDoubleValue
-              if (d == d.toLong.toDouble && math.abs(d) < 1e15) d.toLong.toString
-              else d.toString
+            case VALUE_NUMBER_FLOAT => doubleText(p.getDoubleValue)
             case VALUE_TRUE => "true"
             case VALUE_FALSE => "false"
             case VALUE_NULL => null

@@ -33,6 +33,21 @@ private[sources] object WirePred {
   final val LT = -2; final val LE = -1; final val EQ = 0
   final val GE = 1; final val GT = 2
 
+  /** Wire-row positions `p` reads. */
+  def refs(p: WirePred): Set[Int] = p match {
+    case StrEq(i, _, _) => Set(i)
+    case StrIn(i, _, _) => Set(i)
+    case StrPat(i, _, _, _) => Set(i)
+    case LongCmp(i, _, _) => Set(i)
+    case LongIn(i, _) => Set(i)
+    case DblCmp(i, _, _) => Set(i)
+    case FloatCmp(i, _, _) => Set(i)
+    case NullTest(i, _, _) => Set(i)
+    case AndP(a, b) => refs(a) ++ refs(b)
+    case OrP(a, b) => refs(a) ++ refs(b)
+    case NotP(a) => refs(a)
+  }
+
   /** AND of two predicates where null means "none". */
   def and(a: WirePred, b: WirePred): WirePred =
     if (a == null) b else if (b == null) a else AndP(a, b)

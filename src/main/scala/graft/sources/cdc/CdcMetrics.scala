@@ -19,6 +19,17 @@ final class CdcDecodedRowsMetric extends CustomSumMetric {
     "wire rows decoded and emitted by the CDC readers"
 }
 
+/** Rows that did not come out of the replay reader's typed token pass
+  * ([[CdcRowDecoder]]): emitted rows materialised, in whole or in part,
+  * from wire strings through [[SqlTypes.cast]] or the raw/normalized
+  * string codecs. A positional replay of well-formed rows keeps it at 0,
+  * so a silent fall back shows up in the SQL UI. */
+final class CdcSlowPathRowsMetric extends CustomSumMetric {
+  override def name(): String = CdcMetrics.SlowPathRows
+  override def description(): String =
+    "rows emitted through the wire-string path instead of the typed decode"
+}
+
 /** Executor-side per-task value (shipped back with task completion). */
 final case class CdcTaskMetric(metricName: String, metricValue: Long)
     extends CustomTaskMetric {
@@ -29,6 +40,8 @@ final case class CdcTaskMetric(metricName: String, metricValue: Long)
 object CdcMetrics {
   val FilteredRows = "cdcWireFilteredRows"
   val DecodedRows = "cdcDecodedRows"
+  val SlowPathRows = "cdcSlowPathRows"
   def supported: Array[CustomMetric] =
-    Array(new CdcWireFilteredRowsMetric, new CdcDecodedRowsMetric)
+    Array(new CdcWireFilteredRowsMetric, new CdcDecodedRowsMetric,
+      new CdcSlowPathRowsMetric)
 }

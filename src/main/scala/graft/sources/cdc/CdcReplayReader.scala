@@ -89,6 +89,15 @@ private[cdc] object CdcRowCodec {
   * range start, schema-message validation against the planned schema, and
   * bounded reconnects from the last emitted position on dropped
   * connections. Reads stop as soon as the range end is emitted.
+  *
+  * Positional rows (no `normalizer`) decode in one typed pass: each wire
+  * schema version compiles a [[CdcRowDecoder]], and [[CdcClient]] hands
+  * it the row's bytes, so values go from JSON tokens to Catalyst values
+  * and the GTID trio to primitive longs. A row the decoder declines
+  * (see its doc) takes the fallback: the client's string decode, then
+  * [[CdcRowCodec]] ([[SqlTypes.cast]] per field, the semantics of
+  * record). The `cdcSlowPathRows` task metric counts the emitted rows
+  * that were materialised from wire strings, in whole or in part.
   */
 final class CdcReplayReader(
     p: CdcReplayPartition,
@@ -126,9 +135,17 @@ final class CdcReplayReader(
     System.nanoTime() + math.max(60000L, 8L * p.timeoutMs) * 1000000L
 
   private var client: CdcClient = _
-  private var lastEmitted: Option[Gtid] = start
+  /** Last emitted position (the dedupe floor and the resume point),
+    * unboxed: `hasLast` false means none yet. */
+  private var hasLast = start.isDefined
+  private var lastD = start.fold(0L)(_.domain)
+  private var lastSv = start.fold(0L)(_.serverId)
+  private var lastSq = start.fold(0L)(_.sequence)
+  private def lastEmitted: Option[Gtid] =
+    if (hasLast) Some(Gtid(lastD, lastSv, lastSq)) else None
   private var nFiltered = 0L
   private var nEmitted = 0L
+  private var nSlow = 0L
   private var current: InternalRow = _
   private var done = false
   /** The server always sends its schema before any data; quiet-completion
@@ -149,7 +166,9 @@ final class CdcReplayReader(
     * so an intermediate version that still CONTAINS every planned column —
     * reordered, renamed-type, or with extra columns — stays readable by
     * name; only a version missing a planned column is unrecoverable here
-    * and demands a query restart (graft.streaming.CdcAutoRestart).
+    * and demands a query restart (graft.streaming.CdcAutoRestart). In
+    * positional mode the version's [[CdcRowDecoder]] maps columns by name
+    * itself, so the remap serves only fallback rows.
     *
     * NORMALIZED mode (`normalizer != null`) goes further: payload rows are
     * schema-free, so EVERY schema version that keeps the metadata columns
@@ -161,6 +180,9 @@ final class CdcReplayReader(
     * USER column absent from the current version maps to -1 and reads as
     * absent. */
   private var remap: Array[Int] = _
+  /** Typed decoder of the current connection's schema version
+    * (positional mode; null until the connection's schema arrives). */
+  private var decoder: CdcRowDecoder = _
   /** Wire schema currently governing decode (normalized mode). */
   private var curFields: Seq[CdcField] = p.expected
   /** Normalizer for the CURRENT schema version (normalized mode only;
@@ -173,128 +195,31 @@ final class CdcReplayReader(
     client.connect()
     client.requestData(p.table, g.map(_.toString))
     sawSchema = false // each connection must re-prove liveness
+    decoder = null
   }
 
   override def next(): Boolean = {
     if (done) return false
     if (client == null) connectFrom(start)
     while (true) {
-      val msg =
-        try client.readMessage()
+      var msg: CdcMessage = null
+      val read =
+        try { msg = client.readMessage(decoder); true }
         catch {
           case e: CdcProtocolException => throw e
           case e: java.io.IOException => // mid-read drop → reconnect path
             reconnectOrFail(e.toString)
-            null // NOT CdcTimeout: a reconnect is not a quiet stream
+            false // not a quiet stream: a reconnect is no CdcTimeout
         }
-      if (msg != null) msg match {
-        case CdcSchemaMsg(fields, _) =>
-          sawSchema = true
-          if (normalizer != null) {
-            // normalized mode: adopt ANY version that keeps the metadata
-            // columns — the payload reshapes itself; no restart.
-            if (fields != curFields) {
-              NormalizedCdc.validateEvolved(p.table, p.expected, fields)
-              curFields = fields
-              curNormalizer = WireNormalizer(p.table, fields,
-                normalizer.typed, normalizer.required)
-              remap =
-                if (fields == p.expected) null
-                else {
-                  val names = fields.map(_.name)
-                  // -1 for planned USER columns this version dropped:
-                  // only metadata positions are ever read through the
-                  // remap here (validateEvolved guarantees those exist)
-                  p.expected.map(f => names.indexOf(f.name)).toArray
-                }
-            }
-          } else if (fields == p.expected) remap = null
-          else {
-            val names = fields.map(_.name)
-            val idx = p.expected.map(f => names.indexOf(f.name))
-            if (idx.exists(_ < 0))
-              throw new CdcProtocolException(
-                s"schema drift during replay: expected ${p.expected}, " +
-                  s"server sent $fields — restart the query")
-            remap = idx.toArray
-          }
+      if (!read) ()
+      else if (msg == null) { // a row the decoder took
+        if (takeDecoded()) return true
+        if (done) return false
+      } else msg match {
+        case CdcSchemaMsg(fields, _) => adoptSchema(fields)
         case m: CdcRowMsg =>
-          val values0 = m.values
-          val nulls0 = m.nulls
-          // a row missing one of its GTID columns cannot even be
-          // positioned for dedupe — the delivery error is immediate.
-          // (missingKey names only the FIRST absent key in schema order;
-          // the explicit absence record distinguishes a missing slot
-          // from a genuine JSON-null value.)
-          if (m.missingKey != null && {
-              def bad(i: Int) = {
-                val w = if (remap == null) i else remap(i)
-                m.slotMissing(w)
-              }
-              bad(gtidIdx._1) || bad(gtidIdx._2) || bad(gtidIdx._3)
-            }) m.requireComplete()
-          val (values, nulls) =
-            if (remap == null) (values0, nulls0)
-            else {
-              val v = new Array[String](remap.length)
-              val nu = new Array[Boolean](remap.length)
-              var i = 0
-              while (i < remap.length) {
-                val w = remap(i)
-                if (w < 0) { v(i) = ""; nu(i) = true }
-                else { v(i) = values0(w); nu(i) = nulls0(w) }
-                i += 1
-              }
-              (v, nu)
-            }
-          // JSON-null GTID values decode as "" (distinct from ABSENT slots,
-          // probed above) — unpositionable either way; fail with the real
-          // problem, not a NumberFormatException
-          if (values(gtidIdx._1).isEmpty || values(gtidIdx._2).isEmpty ||
-              values(gtidIdx._3).isEmpty)
-            throw new CdcProtocolException(
-              s"replayed event carries a null/empty GTID column " +
-                s"(domain='${values(gtidIdx._1)}', " +
-                s"server_id='${values(gtidIdx._2)}', " +
-                s"sequence='${values(gtidIdx._3)}') — the row cannot be " +
-                "positioned within the replay range")
-          val g = Gtid(values(gtidIdx._1).toLong, values(gtidIdx._2).toLong,
-            values(gtidIdx._3).toLong)
-          // vector mode: foreign-domain events interleave through the
-          // replay — not ours, not positioned here, skipped wholesale
-          if (p.domainFilter.exists(_ != g.domain)) ()
-          // skip the server's inclusive replay of the range start and any
-          // re-delivery below the last emitted position after a reconnect
-          else if (lastEmitted.forall(g > _)) {
-            if (g > end) { done = true; return false } // past range: defensive
-            // the row WILL be delivered (or predicated) — reference A10:
-            // a missing schema key is an error at delivery. Rows at or
-            // below the dedupe floor never reach here, so the inclusive
-            // replay of a pre-DDL boundary event stays survivable.
-            m.requireComplete()
-            lastEmitted = Some(g) // position advances even for filtered rows
-            reconnects = 0 // forward progress resets the budget (like the tailer)
-            quietVerified = false // data flowed: any earlier quiet was transient
-            if (g == end) done = true // last row of the range, pass or not
-            if (pred == null || pred.eval(values, nulls)) {
-              current =
-                // normalized mode materializes through the CURRENT
-                // version's normalizer over the RAW wire row — a row
-                // carries exactly the keys its governing schema version
-                // declares (pred/GTID read the remapped planned view;
-                // both only touch metadata columns, stable across
-                // versions)
-                if (normalizer != null) curNormalizer.toRow(values0, nulls0)
-                else CdcRowCodec.toInternalRow(
-                  CdcRowCodec.project(values, projection),
-                  CdcRowCodec.project(nulls, projection), dts, typed, mask)
-              nEmitted += 1
-              return true
-            }
-            nFiltered += 1
-            if (done) return false // range exhausted on a filtered row
-            // else: filtered mid-range — keep reading
-          }
+          if (takeRow(m)) return true
+          if (done) return false
         case CdcTimeout =>
           if (p.completeOnQuiet && sawSchema) {
             // user-named bound, quiet stream: the range holds no more
@@ -320,6 +245,151 @@ final class CdcReplayReader(
     false // unreachable
   }
 
+  private def adoptSchema(fields: Seq[CdcField]): Unit = {
+    sawSchema = true
+    if (normalizer != null) {
+      // normalized mode: adopt ANY version that keeps the metadata
+      // columns — the payload reshapes itself; no restart.
+      if (fields != curFields) {
+        NormalizedCdc.validateEvolved(p.table, p.expected, fields)
+        curFields = fields
+        curNormalizer = WireNormalizer(p.table, fields,
+          normalizer.typed, normalizer.required)
+        remap =
+          if (fields == p.expected) null
+          else {
+            val names = fields.map(_.name)
+            // -1 for planned USER columns this version dropped:
+            // only metadata positions are ever read through the
+            // remap here (validateEvolved guarantees those exist)
+            p.expected.map(f => names.indexOf(f.name)).toArray
+          }
+      }
+    } else {
+      if (fields == p.expected) remap = null
+      else {
+        val names = fields.map(_.name)
+        val idx = p.expected.map(f => names.indexOf(f.name))
+        if (idx.exists(_ < 0))
+          throw new CdcProtocolException(
+            s"schema drift during replay: expected ${p.expected}, " +
+              s"server sent $fields — restart the query")
+        remap = idx.toArray
+      }
+      decoder = CdcRowDecoder.compile(fields, p.expected, dts, typed,
+        projection, mask, pred, gtidIdx)
+    }
+  }
+
+  private final val Skip = 0
+  private final val Past = 1
+  private final val Take = 2
+
+  /** Where a replayed event falls: [[Skip]] (a foreign domain in vector
+    * mode, or the server's inclusive replay of the range start and any
+    * re-delivery at or below the last emitted position after a
+    * reconnect), [[Past]] (beyond the range end; defensive, ends the
+    * read) or [[Take]]. */
+  private def place(d: Long, sv: Long, sq: Long): Int =
+    if (p.domainFilter.isDefined && p.domainFilter.get != d) Skip
+    else if (hasLast && Gtid.compare(d, sv, sq, lastD, lastSv, lastSq) <= 0) Skip
+    else if (Gtid.compare(d, sv, sq, end.domain, end.serverId, end.sequence) > 0) {
+      done = true
+      Past
+    } else Take
+
+  /** Advance past a taken event: the position moves even for rows the
+    * predicate then filters. */
+  private def advance(d: Long, sv: Long, sq: Long): Unit = {
+    hasLast = true; lastD = d; lastSv = sv; lastSq = sq
+    reconnects = 0 // forward progress resets the budget (like the tailer)
+    quietVerified = false // data flowed: any earlier quiet was transient
+    // last row of the range, pass or not
+    if (d == end.domain && sv == end.serverId && sq == end.sequence) done = true
+  }
+
+  /** The decoder's last row; true when it is emitted. */
+  private def takeDecoded(): Boolean = {
+    val dec = decoder
+    val g = dec.gtid
+    if (place(g(0), g(1), g(2)) != Take) return false
+    advance(g(0), g(1), g(2))
+    if (pred == null || pred.eval(dec.predValues, dec.predNulls)) {
+      current = dec.row
+      nEmitted += 1
+      if (dec.slow) nSlow += 1
+      true
+    } else { nFiltered += 1; false }
+  }
+
+  /** A row off the string path; true when it is emitted. */
+  private def takeRow(m: CdcRowMsg): Boolean = {
+    val values0 = m.values
+    val nulls0 = m.nulls
+    // a row missing one of its GTID columns cannot even be
+    // positioned for dedupe — the delivery error is immediate.
+    // (missingKey names only the FIRST absent key in schema order;
+    // the explicit absence record distinguishes a missing slot
+    // from a genuine JSON-null value.)
+    if (m.missingKey != null && {
+        def bad(i: Int) = {
+          val w = if (remap == null) i else remap(i)
+          m.slotMissing(w)
+        }
+        bad(gtidIdx._1) || bad(gtidIdx._2) || bad(gtidIdx._3)
+      }) m.requireComplete()
+    var values = values0
+    var nulls = nulls0
+    if (remap != null) {
+      values = new Array[String](remap.length)
+      nulls = new Array[Boolean](remap.length)
+      var i = 0
+      while (i < remap.length) {
+        val w = remap(i)
+        if (w < 0) { values(i) = ""; nulls(i) = true }
+        else { values(i) = values0(w); nulls(i) = nulls0(w) }
+        i += 1
+      }
+    }
+    // JSON-null GTID values decode as "" (distinct from ABSENT slots,
+    // probed above) — unpositionable either way; fail with the real
+    // problem, not a NumberFormatException
+    if (values(gtidIdx._1).isEmpty || values(gtidIdx._2).isEmpty ||
+        values(gtidIdx._3).isEmpty)
+      throw new CdcProtocolException(
+        s"replayed event carries a null/empty GTID column " +
+          s"(domain='${values(gtidIdx._1)}', " +
+          s"server_id='${values(gtidIdx._2)}', " +
+          s"sequence='${values(gtidIdx._3)}') — the row cannot be " +
+          "positioned within the replay range")
+    val d = values(gtidIdx._1).toLong
+    val sv = values(gtidIdx._2).toLong
+    val sq = values(gtidIdx._3).toLong
+    if (place(d, sv, sq) != Take) return false
+    // the row WILL be delivered (or predicated) — reference A10:
+    // a missing schema key is an error at delivery. Rows at or
+    // below the dedupe floor never reach here, so the inclusive
+    // replay of a pre-DDL boundary event stays survivable.
+    m.requireComplete()
+    advance(d, sv, sq)
+    if (pred == null || pred.eval(values, nulls)) {
+      current =
+        // normalized mode materializes through the CURRENT
+        // version's normalizer over the RAW wire row — a row
+        // carries exactly the keys its governing schema version
+        // declares (pred/GTID read the remapped planned view;
+        // both only touch metadata columns, stable across
+        // versions)
+        if (normalizer != null) curNormalizer.toRow(values0, nulls0)
+        else CdcRowCodec.toInternalRow(
+          CdcRowCodec.project(values, projection),
+          CdcRowCodec.project(nulls, projection), dts, typed, mask)
+      nEmitted += 1
+      nSlow += 1
+      true
+    } else { nFiltered += 1; false }
+  }
+
   private def reconnectOrFail(why: String): Unit = {
     reconnects += 1
     if (reconnects > MaxReconnects)
@@ -334,7 +404,8 @@ final class CdcReplayReader(
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(CdcTaskMetric(CdcMetrics.FilteredRows, nFiltered),
-      CdcTaskMetric(CdcMetrics.DecodedRows, nEmitted))
+      CdcTaskMetric(CdcMetrics.DecodedRows, nEmitted),
+      CdcTaskMetric(CdcMetrics.SlowPathRows, nSlow))
 
   override def close(): Unit = if (client != null) client.close()
 }

@@ -800,8 +800,10 @@ class CdcPartitionReaderFactory(schema: StructType, typed: Boolean,
             CdcRowCodec.project(p.values(i), projection),
             CdcRowCodec.project(p.nulls(i), projection), dts, typed, mask)
         override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+          // every row here is cast from driver-decoded wire strings
           Array(CdcTaskMetric(CdcMetrics.FilteredRows, nFiltered),
-            CdcTaskMetric(CdcMetrics.DecodedRows, nEmitted))
+            CdcTaskMetric(CdcMetrics.DecodedRows, nEmitted),
+            CdcTaskMetric(CdcMetrics.SlowPathRows, nEmitted))
         override def close(): Unit = ()
       }
       case other => throw new IllegalArgumentException(

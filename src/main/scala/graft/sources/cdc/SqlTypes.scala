@@ -75,10 +75,101 @@ object SqlTypes {
     .parseDefaulting(java.time.temporal.ChronoField.SECOND_OF_MINUTE, 0)
     .toFormatter
 
+  /** Sentinel of the canonical parsers: the text is not in the shape
+    * they decide, so java.time does. */
+  private final val NotCanonical = Long.MinValue
+
+  /** Two ASCII digits at `i`, or -1. */
+  private def digits2(a: Array[Char], i: Int): Int = {
+    val x = a(i) - '0'
+    val y = a(i + 1) - '0'
+    if (x < 0 || x > 9 || y < 0 || y > 9) -1 else x * 10 + y
+  }
+
+  /** Epoch day of a canonical `yyyy-MM-dd` in `a(off until off + 10)`:
+    * four digits, year 1-9999, a real calendar day. Everything else
+    * (signs, longer years, year 0, Feb 30, month 13, ...) is
+    * [[NotCanonical]], because the two java.time parsers disagree there
+    * (DATE resolves STRICT, DATETIME resolves SMART and clamps the day). */
+  private def canonicalDay(a: Array[Char], off: Int): Long = {
+    if (a(off + 4) != '-' || a(off + 7) != '-') return NotCanonical
+    val hi = digits2(a, off)
+    val lo = digits2(a, off + 2)
+    val m = digits2(a, off + 5)
+    val d = digits2(a, off + 8)
+    if (hi < 0 || lo < 0 || m < 1 || m > 12 || d < 1) return NotCanonical
+    val y = hi * 100 + lo
+    if (y == 0 || d > java.time.Month.of(m).length(java.time.Year.isLeap(y)))
+      return NotCanonical
+    LocalDate.of(y, m, d).toEpochDay
+  }
+
+  /** Microseconds of a canonical `yyyy-MM-dd[ HH:mm:ss[.f{1,6}]]`, every
+    * field in range; anything else is [[NotCanonical]] (hour 24, a bare
+    * '.', seven fraction digits, trailing text, ...). */
+  private def canonicalMicros(a: Array[Char], off: Int, len: Int): Long = {
+    if (len != 10 && len != 19 && (len < 21 || len > 26)) return NotCanonical
+    val day = canonicalDay(a, off)
+    if (day == NotCanonical) return NotCanonical
+    if (len == 10) return day * 86400000000L
+    if (a(off + 10) != ' ' || a(off + 13) != ':' || a(off + 16) != ':')
+      return NotCanonical
+    val h = digits2(a, off + 11)
+    val mi = digits2(a, off + 14)
+    val s = digits2(a, off + 17)
+    if (h < 0 || h > 23 || mi < 0 || mi > 59 || s < 0 || s > 59) return NotCanonical
+    var micros = day * 86400000000L + (h * 3600L + mi * 60L + s) * 1000000L
+    if (len > 19) {
+      if (a(off + 19) != '.') return NotCanonical
+      var f = 0
+      var i = 20
+      while (i < len) {
+        val c = a(off + i) - '0'
+        if (c < 0 || c > 9) return NotCanonical
+        f = f * 10 + c
+        i += 1
+      }
+      while (i < 26) { f *= 10; i += 1 }
+      micros += f
+    }
+    micros
+  }
+
+  /** DATE wire text → epoch day (Int), or null when unparseable. A
+    * canonical date takes the digit parser; any other text goes through
+    * `LocalDate.parse`, so the result is java.time's by construction. */
+  private[cdc] def epochDay(a: Array[Char], off: Int, len: Int): Any = {
+    val d = if (len == 10) canonicalDay(a, off) else NotCanonical
+    if (d != NotCanonical) d.toInt
+    else try LocalDate.parse(new String(a, off, len)).toEpochDay.toInt
+    catch { case _: RuntimeException => null }
+  }
+
+  /** DATETIME/TIMESTAMP wire text → microseconds since the epoch (UTC),
+    * or null when unparseable. A canonical value takes the digit parser;
+    * any other text goes through [[DateTimeFmt]] and its SMART resolver
+    * (which clamps Feb 30 and rolls 24:00:00 over), so the result is
+    * java.time's by construction. */
+  private[cdc] def timestampMicros(a: Array[Char], off: Int, len: Int): Any = {
+    val m = canonicalMicros(a, off, len)
+    if (m != NotCanonical) m
+    else try {
+      val ldt = LocalDateTime.parse(new String(a, off, len), DateTimeFmt)
+      ldt.toEpochSecond(ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
+    } catch { case _: RuntimeException => null }
+  }
+
   /** Wire string → Catalyst value for one field. Returns null on JSON null
     * (typed mode's NULL, vs the reference's "" conflation,
     * cdc_connector.cpp:106-107) and on unparseable values (permissive,
-    * like Spark's PERMISSIVE JSON mode). */
+    * like Spark's PERMISSIVE JSON mode).
+    *
+    * This is the semantics of record for typed values. The replay
+    * reader's [[CdcRowDecoder]] writes most values straight from JSON
+    * tokens and must equal this function on the token's wire string; a
+    * token/column pair it has no exact native rule for is rendered to
+    * that string and passed through here. DATE and DATETIME share the
+    * decoder's digit parser ([[epochDay]], [[timestampMicros]]). */
   def cast(value: String, isNull: Boolean, dt: DataType): Any = {
     if (isNull || value == null) return null
     try dt match {
@@ -92,10 +183,8 @@ object SqlTypes {
       case DoubleType    => value.toDouble
       case d: DecimalType =>
         org.apache.spark.sql.types.Decimal(BigDecimal(value), d.precision, d.scale)
-      case DateType      => LocalDate.parse(value).toEpochDay.toInt
-      case TimestampType =>
-        val ldt = LocalDateTime.parse(value, DateTimeFmt)
-        ldt.toEpochSecond(ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
+      case DateType      => val a = value.toCharArray; epochDay(a, 0, a.length)
+      case TimestampType => val a = value.toCharArray; timestampMicros(a, 0, a.length)
       case BinaryType    => value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
       case _             => UTF8String.fromString(value)
     } catch { case _: RuntimeException | _: java.time.DateTimeException => null }

@@ -138,4 +138,34 @@ class CdcClientSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("bigint unsigned above 2^63-1 decodes exactly through the replay " +
+      "reader, raw and typed (no Long wrap)") {
+    val schema = Schema.replace(
+      """{"name":"id","type":"int","real_type":"int","length":-1}""",
+      """{"name":"id","type":"long","real_type":"bigint unsigned","length":-1}""")
+    val big = Seq("9223372036854775808", "18446744073709551615")
+    val events = big.zipWithIndex.map { case (v, i) =>
+      event(i + 1L, "insert", 0, s"n$i").replace("\"id\":0", s"\"id\":$v")
+    }
+    val srv = new MockMaxScaleServer(schema, events)
+    withServer(srv) { srv =>
+      val fields = CdcClient.parseSchemaFields(CdcClient.Json.readTree(schema))
+      assert(fields(6).sqlType == "bigint unsigned")
+      def drain(typed: Boolean): Seq[Any] = {
+        val dts = SqlTypes.toStructType(fields, typed).fields.map(_.dataType)
+        val r = new CdcReplayReader(CdcReplayPartition("127.0.0.1", srv.port,
+          "u", "p", "db.t", fields, startExclusive = None,
+          endInclusive = "0-1-2", timeoutMs = 2000), dts, typed)
+        try Iterator.continually(r).takeWhile(_.next())
+          .map(_.get().get(6, dts(6))).toList
+        finally r.close()
+      }
+      assert(drain(typed = false).map(_.toString) == big)
+      val typed = drain(typed = true).map(_.asInstanceOf[
+        org.apache.spark.sql.types.Decimal])
+      assert(typed.map(_.toJavaBigDecimal.toPlainString) == big)
+      assert(typed.forall(d => d.precision == 20 && d.scale == 0))
+    }
+  }
 }
