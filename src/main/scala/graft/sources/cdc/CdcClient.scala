@@ -1,6 +1,6 @@
 package graft.sources.cdc
 
-import java.io.{BufferedInputStream, IOException, InputStream, OutputStream}
+import java.io.{IOException, InputStream, OutputStream}
 import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
@@ -176,6 +176,12 @@ object CdcClient {
   * cdc_connector.cpp:147-223) → `requestData(table, gtid)` →
   * `readMessage()` loop → `close()` (sends CLOSE, reference
   * cdc_connector.cpp:225-235).
+  *
+  * Every data row is decoded from the client's own read buffer by one
+  * byte-level scan ([[CdcLineScanner]], compiled per schema version);
+  * Jackson's tree parse is the path of record for the lines the scan
+  * declines (schema messages, malformed or unusual rows) and for nothing
+  * else. The counters below say how many lines took which way.
   */
 final class CdcClient(
     host: String,
@@ -192,12 +198,16 @@ final class CdcClient(
   /** Current schema keys, swapped on every in-band schema message
     * (reference cdc_connector.cpp:339-344). */
   private var schemaFields: Seq[CdcField] = Nil
+  /** The row scanner of the current schema version (null until a data
+    * row arrives under it). */
+  private var scanner: CdcLineScanner = _
   /** Carry-over bytes between reads: offset-indexed buffer with AMORTIZED
     * compaction (the reference's technique, cdc_connector.cpp:459-518).
     * A naive remove-prefix-per-line is O(buffered bytes) per line —
     * quadratic when the server streams faster than we frame (measured
-    * 1 k rows/s vs 100 k+ with this layout). */
-  private var buf = new Array[Byte](32 * 1024)
+    * 1 k rows/s vs 100 k+ with this layout). The socket reads straight
+    * into it: there is no second buffer underneath. */
+  private var buf = new Array[Byte](64 * 1024)
   private var bufStart = 0
   private var bufEnd = 0
   /** Absolute position up to which we already scanned for '\n'. */
@@ -206,6 +216,15 @@ final class CdcClient(
     * "the server is gone" when a partial line is still buffered. */
   private var eofSeen = false
 
+  /** Bytes framed off the wire, newlines included. */
+  private[cdc] var framedBytes = 0L
+  /** Data rows the byte-level scan took, and their bytes. */
+  private[cdc] var scannedRows = 0L
+  private[cdc] var scannedBytes = 0L
+  /** Data rows the scan (or a decoder) declined: the tree path decoded
+    * them. */
+  private[cdc] var declinedRows = 0L
+
   def currentFields: Seq[CdcField] = schemaFields
 
   def connect(): Unit = {
@@ -213,7 +232,7 @@ final class CdcClient(
     socket.connect(new InetSocketAddress(host, port), timeoutMs)
     socket.setSoTimeout(timeoutMs)
     socket.setTcpNoDelay(true)
-    in = new BufferedInputStream(socket.getInputStream, 32 * 1024)
+    in = socket.getInputStream
     out = socket.getOutputStream
     // A2 auth (cdc_connector.cpp:366-403)
     send(authMessage(user, password))
@@ -235,15 +254,18 @@ final class CdcClient(
   /** Read one framed message. Newline-delimited JSON; schema messages are
     * decoded and adopted (and surfaced to the caller — unlike the
     * reference's silent recursion, so the source can fail fast on
-    * mid-stream re-schema, SURVEY.md §1.3). */
+    * mid-stream re-schema, SURVEY.md §1.3). A data row comes back as
+    * strings: the scan's text of each value ([[CdcLineScanner.strings]]),
+    * or the tree path's for a row the scan declines — the same strings
+    * either way. */
   def readMessage(): CdcMessage = readMessage(null)
 
-  /** [[readMessage]] for the replay hot path: a data row that `dec` (a
-    * [[CdcRowDecoder]] compiled for the current schema) takes is decoded
-    * straight from the buffer slice into `dec`, and `null` is returned;
-    * every other line, including rows `dec` declines, yields exactly the
-    * message [[readMessage]] returns. A decoder compiled for another
-    * schema version is ignored. */
+  /** [[readMessage]] for the readers that position rows by GTID: a data
+    * row that `dec` (a [[CdcRowDecoder]] compiled for the current schema
+    * version) takes stays in the buffer for `dec` to read, and `null` is
+    * returned; every other line, including rows `dec` declines, yields
+    * exactly the message [[readMessage]] returns. A decoder compiled for
+    * another schema version is ignored. */
   private[cdc] def readMessage(dec: CdcRowDecoder): CdcMessage = readLineSlice() match {
     case -1 => if (bufEnd > bufStart && looksLikeErr(pending)) {
         // MaxScale quirk: ERR payloads may lack the trailing newline
@@ -261,91 +283,36 @@ final class CdcClient(
           (buf(lineOff + 1) == 'R' || buf(lineOff + 1) == 'r') &&
           (buf(lineOff + 2) == 'R' || buf(lineOff + 2) == 'r'))
         throw new CdcProtocolException(new String(buf, lineOff, len, UTF_8))
-      else if (dec != null && (dec.wire eq schemaFields) &&
-          dec.decode(Json.createParser(buf, lineOff, len))) null
-      else {
-        // hot loop decodes straight from the buffer slice; the String
-        // materializes only on the slow paths below
-        val fast = decodeRowStreaming(buf, lineOff, len)
-        if (fast != null) fast
-        else {
-          val line = new String(buf, lineOff, len, UTF_8)
-          // slow path: schema messages, malformed lines, and any unusual
-          // shape (nested values, over-long ints, missing keys) — the
-          // tree walk is the semantics of record; the fast path only
-          // handles what it can reproduce bit-for-bit
-          val node =
-            try Json.readTree(line)
-            catch { case e: Exception =>
-              throw new CdcProtocolException(s"malformed JSON event: ${e.getMessage}")
-            }
-          if (isSchema(node)) {
-            schemaFields = parseSchemaFields(node)
-            keyIndex = null // rebuilt lazily against the new schema
-            CdcSchemaMsg(schemaFields, line)
-          } else decodeRow(node)
-        }
-      }
-  }
-
-  /** Streaming fast path for the hot loop: a single-pass token walk over
-    * a flat all-scalar row, ~2× the tree parse (measured 1.24 M vs
-    * 0.62 M rows/s on the 8-column throughput fixture). Converts each
-    * token exactly as [[CdcClient.scalarToString]] would have (same
-    * integral/floating formatting branches), and DEFERS to the tree path
-    * (returns null) on anything it cannot reproduce bit-for-bit: no
-    * schema adopted yet, nested arrays/objects (includes every schema
-    * message — their `fields` value is an array), numbers beyond Long,
-    * malformed JSON, or a missing schema key. Correctness contract:
-    * null ⇒ the caller re-parses the SAME line via the tree path, so
-    * this path can only ever change speed, not semantics. */
-  private var keyIndex: java.util.HashMap[String, Integer] = _
-  private def decodeRowStreaming(b: Array[Byte], off: Int, len: Int): CdcRowMsg = {
-    import com.fasterxml.jackson.core.JsonToken._
-    if (schemaFields.isEmpty) return null
-    if (keyIndex == null) {
-      keyIndex = new java.util.HashMap[String, Integer]()
-      var i = 0
-      while (i < schemaFields.length) { keyIndex.put(schemaFields(i).name, i); i += 1 }
-    }
-    val n = schemaFields.length
-    val values = new Array[String](n)
-    val nulls = new Array[Boolean](n)
-    val seen = new Array[Boolean](n)
-    var filled = 0
-    val p = Json.createParser(b, off, len)
-    try {
-      if (p.nextToken() != START_OBJECT) return null
-      var tok = p.nextToken()
-      while (tok == FIELD_NAME) {
-        val name = p.currentName()
-        val vt = p.nextToken()
-        if (vt == START_OBJECT || vt == START_ARRAY) return null
-        val k = keyIndex.get(name)
-        if (k != null) {
-          val i = k.intValue()
-          val s = vt match {
-            case VALUE_STRING => p.getText
-            case VALUE_NUMBER_INT => p.getLongValue.toString
-            case VALUE_NUMBER_FLOAT => doubleText(p.getDoubleValue)
-            case VALUE_TRUE => "true"
-            case VALUE_FALSE => "false"
-            case VALUE_NULL => null
-            case _ => return null
+      if (schemaFields.nonEmpty) {
+        if (scanner == null) scanner = new CdcLineScanner(schemaFields)
+        if (scanner.scan(buf, lineOff, len)) {
+          if (dec == null || !(dec.wire eq schemaFields)) {
+            scannedRows += 1; scannedBytes += len
+            return scanner.strings()
           }
-          if (!seen(i)) { seen(i) = true; filled += 1 }
-          if (s == null) { nulls(i) = true; values(i) = "" }
-          else { nulls(i) = false; values(i) = s }
+          if (dec.take(scanner)) {
+            scannedRows += 1; scannedBytes += len
+            return null
+          }
         }
-        tok = p.nextToken()
       }
-      if (tok != END_OBJECT || filled != n) return null
-      CdcRowMsg(values, nulls)
-    } catch {
-      // malformed JSON / numeric coercion: let the tree path produce the
-      // canonical error (or handle the exotic-but-valid shape)
-      case _: Exception => null
-    } finally p.close()
+      // the path of record: schema messages, malformed lines, and every
+      // row the scan declined (nested values, over-long ints, missing
+      // keys, unusual UTF-8, ...), parsed as a tree
+      val line = new String(buf, lineOff, len, UTF_8)
+      val node =
+        try Json.readTree(line)
+        catch { case e: Exception =>
+          throw new CdcProtocolException(s"malformed JSON event: ${e.getMessage}")
+        }
+      if (isSchema(node)) {
+        schemaFields = parseSchemaFields(node)
+        scanner = null // compiled lazily against the new version
+        CdcSchemaMsg(schemaFields, line)
+      } else {
+        declinedRows += 1
+        decodeRow(node)
+      }
   }
 
   /** A10 row decode (reference `process_row`, cdc_connector.cpp:288-319):
@@ -439,31 +406,35 @@ final class CdcClient(
   /** Slice coordinates of the line [[readLineSlice]] last framed. The
     * slice stays valid until the NEXT read fills the buffer (consuming a
     * line only advances indices; the bytes are untouched), which lets
-    * the hot loop decode straight from `buf` and allocate a String only
-    * on the slow paths. */
+    * the scan and the decoders read straight from `buf` and allocate a
+    * String only on the tree path. */
   private var lineOff = 0
 
   /** One '\n'-framed line as a slice of `buf`: returns its LENGTH with
     * `lineOff` set (0 = empty line), `-1` on timeout (partial bytes stay
-    * buffered for the next call), `-2` on EOF. */
+    * buffered for the next call), `-2` on EOF. The line end is found
+    * eight bytes at a time ([[CdcLineScanner.newline]]); the timeout
+    * clock starts only when no whole line is buffered and the read must
+    * block. */
   private def readLineSlice(): Int = {
-    val start = System.nanoTime()
+    var start = 0L
     while (true) {
-      var i = math.max(scanPos, bufStart)
-      while (i < bufEnd && buf(i) != '\n') i += 1
+      val i = CdcLineScanner.newline(buf, math.max(scanPos, bufStart), bufEnd)
       if (i < bufEnd) {
         lineOff = bufStart
         val len = i - bufStart
+        framedBytes += len + 1
         bufStart = i + 1
         scanPos = bufStart
         if (bufStart == bufEnd) clearPending() // resets indices, not bytes
         return len
       }
       scanPos = i
+      if (start == 0L) start = System.nanoTime()
       val remainMs = timeoutMs - (System.nanoTime() - start) / 1000000
       if (remainMs <= 0) return -1
       socket.setSoTimeout(math.max(1, remainMs.toInt))
-      ensureRoom(16 * 1024)
+      ensureRoom(32 * 1024)
       val got =
         try in.read(buf, bufEnd, buf.length - bufEnd)
         catch { case _: SocketTimeoutException => return -1 }

@@ -19,7 +19,7 @@ final class CdcDecodedRowsMetric extends CustomSumMetric {
     "wire rows decoded and emitted by the CDC readers"
 }
 
-/** Rows that did not come out of the replay reader's typed token pass
+/** Rows that did not come out of the replay reader's byte-level decode
   * ([[CdcRowDecoder]]): emitted rows materialised, in whole or in part,
   * from wire strings through [[SqlTypes.cast]] or the raw/normalized
   * string codecs. A positional replay of well-formed rows keeps it at 0,
@@ -28,6 +28,14 @@ final class CdcSlowPathRowsMetric extends CustomSumMetric {
   override def name(): String = CdcMetrics.SlowPathRows
   override def description(): String =
     "rows emitted through the wire-string path instead of the typed decode"
+}
+
+/** Bytes each replay task framed off the wire, newlines included, over
+  * all its connections: with [[CdcDecodedRowsMetric]] the wire cost per
+  * emitted row, and the input a decode rate is measured against. */
+final class CdcWireBytesMetric extends CustomSumMetric {
+  override def name(): String = CdcMetrics.WireBytes
+  override def description(): String = "bytes framed off the wire by the CDC replay readers"
 }
 
 /** Executor-side per-task value (shipped back with task completion). */
@@ -41,7 +49,8 @@ object CdcMetrics {
   val FilteredRows = "cdcWireFilteredRows"
   val DecodedRows = "cdcDecodedRows"
   val SlowPathRows = "cdcSlowPathRows"
+  val WireBytes = "cdcWireBytes"
   def supported: Array[CustomMetric] =
     Array(new CdcWireFilteredRowsMetric, new CdcDecodedRowsMetric,
-      new CdcSlowPathRowsMetric)
+      new CdcSlowPathRowsMetric, new CdcWireBytesMetric)
 }

@@ -90,14 +90,18 @@ private[cdc] object CdcRowCodec {
   * bounded reconnects from the last emitted position on dropped
   * connections. Reads stop as soon as the range end is emitted.
   *
-  * Positional rows (no `normalizer`) decode in one typed pass: each wire
-  * schema version compiles a [[CdcRowDecoder]], and [[CdcClient]] hands
-  * it the row's bytes, so values go from JSON tokens to Catalyst values
-  * and the GTID trio to primitive longs. A row the decoder declines
-  * (see its doc) takes the fallback: the client's string decode, then
-  * [[CdcRowCodec]] ([[SqlTypes.cast]] per field, the semantics of
-  * record). The `cdcSlowPathRows` task metric counts the emitted rows
-  * that were materialised from wire strings, in whole or in part.
+  * Positional rows (no `normalizer`) decode straight from the client's
+  * buffer: each wire schema version compiles a [[CdcRowDecoder]] over
+  * the client's byte-level scan ([[CdcLineScanner]]). A scanned row is
+  * positioned from its GTID trio (primitive longs), then the pushed
+  * predicate reads the columns it references, and only a row that is
+  * emitted is built, its projected and unmasked columns going from the
+  * row's bytes to Catalyst values. A row the scan or the decoder
+  * declines (see their docs) takes the fallback: the tree path's string
+  * decode, then [[CdcRowCodec]] ([[SqlTypes.cast]] per field, the
+  * semantics of record). The `cdcSlowPathRows` task metric counts the
+  * emitted rows that were materialised from wire strings, in whole or in
+  * part, and `cdcWireBytes` the bytes the task framed off the wire.
   */
 final class CdcReplayReader(
     p: CdcReplayPartition,
@@ -146,6 +150,8 @@ final class CdcReplayReader(
   private var nFiltered = 0L
   private var nEmitted = 0L
   private var nSlow = 0L
+  /** Bytes framed by the connections already replaced. */
+  private var closedBytes = 0L
   private var current: InternalRow = _
   private var done = false
   /** The server always sends its schema before any data; quiet-completion
@@ -191,6 +197,7 @@ final class CdcReplayReader(
   private var curNormalizer: WireNormalizer = normalizer
 
   private def connectFrom(g: Option[Gtid]): Unit = {
+    if (client != null) closedBytes += client.framedBytes
     client = new CdcClient(p.host, p.port, p.user, p.password, p.timeoutMs)
     client.connect()
     client.requestData(p.table, g.map(_.toString))
@@ -308,13 +315,14 @@ final class CdcReplayReader(
     if (d == end.domain && sv == end.serverId && sq == end.sequence) done = true
   }
 
-  /** The decoder's last row; true when it is emitted. */
+  /** The row the decoder took; true when it is emitted. It is built
+    * only then. */
   private def takeDecoded(): Boolean = {
     val dec = decoder
     val g = dec.gtid
     if (place(g(0), g(1), g(2)) != Take) return false
     advance(g(0), g(1), g(2))
-    if (pred == null || pred.eval(dec.predValues, dec.predNulls)) {
+    if (pred == null || dec.predicate(pred)) {
       current = dec.row
       nEmitted += 1
       if (dec.slow) nSlow += 1
@@ -405,7 +413,9 @@ final class CdcReplayReader(
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(CdcTaskMetric(CdcMetrics.FilteredRows, nFiltered),
       CdcTaskMetric(CdcMetrics.DecodedRows, nEmitted),
-      CdcTaskMetric(CdcMetrics.SlowPathRows, nSlow))
+      CdcTaskMetric(CdcMetrics.SlowPathRows, nSlow),
+      CdcTaskMetric(CdcMetrics.WireBytes,
+        closedBytes + (if (client == null) 0L else client.framedBytes)))
 
   override def close(): Unit = if (client != null) client.close()
 }

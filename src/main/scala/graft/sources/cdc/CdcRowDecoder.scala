@@ -1,242 +1,228 @@
 package graft.sources.cdc
 
-import java.nio.charset.StandardCharsets.UTF_8
-
-import com.fasterxml.jackson.core.{JsonParser, JsonToken}
-import com.fasterxml.jackson.core.JsonParser.NumberType
-import com.fasterxml.jackson.core.io.SerializedString
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One typed pass from JSON tokens to Catalyst values: the replay
-  * reader's positional decode ([[CdcReplayReader]]), compiled once per
-  * wire schema version against the planned fields, the projection, the
-  * decode-skip mask, the pushed predicate's columns and the mode.
+/** Pass 2 of the byte-level row scan ([[CdcLineScanner]]) for the readers
+  * that position rows by GTID, compiled once per wire schema version.
   *
-  * Each field goes from its token straight to the output value:
-  * integers through `getLongValue` with a range check, reals through
-  * `getDoubleValue`, decimals as an exact unscaled long, DATE and
-  * DATETIME through [[SqlTypes]]' digit parser, strings as `UTF8String`.
-  * Masked and unplanned columns are never materialised; the GTID trio
-  * comes out as primitive longs ([[gtid]]).
+  *  - The replay reader's decoder ([[compile]]) is compiled against the
+  *    planned fields, the projection, the decode-skip mask, the pushed
+  *    predicate's columns and the mode (typed or raw). [[take]] reads the
+  *    GTID trio as primitive longs ([[gtid]]); the reader positions the
+  *    row, runs the predicate ([[predicate]]) and only then asks for the
+  *    row ([[row]]), so dedupe-skipped and filtered rows never build one.
+  *  - The tailer's decoder ([[positions]]) reads the trio only.
+  *
+  * Each output field goes from its scanned token straight to its value:
+  * integers range-checked from the scanned long, reals from the scanned
+  * double, decimals as an exact unscaled long, DATE and DATETIME through
+  * [[SqlTypes]]' digit parser on the row's bytes, strings as `UTF8String`
+  * (a copy of the row's bytes when the string has no escapes). Masked
+  * and unplanned columns are never materialised.
   *
   * Exactness is by construction. The result is what
   * [[CdcClient.scalarToString]] followed by [[SqlTypes.cast]] (typed) or
   * `UTF8String.fromString` with null as "" (raw) gives for the same
-  * token: a token/column pair without an exact native rule here (a JSON
+  * value: a token/column pair without an exact native rule here (a JSON
   * string in an int column, a real in an int column, a decimal whose
   * real has more fraction digits than its scale, ...) is rendered to
-  * that wire string and cast, and the row is marked [[slow]]. A row this
-  * pass cannot take at all makes [[decode]] return false, and the caller
-  * decodes the same line the string way: nested values, a missing
-  * schema key, an integer beyond Long, a GTID column that is not a JSON
-  * integer, malformed JSON. The columns the predicate reads get their
-  * wire strings too ([[predValues]]), so it sees what it sees on the
-  * string path.
+  * that wire string and cast, and the row is marked [[slow]]. A row the
+  * scan declines, or whose GTID column is not a JSON integer, is left to
+  * the string path: [[take]] returns false. The columns the predicate
+  * reads get their wire strings ([[predValues]]), so it sees what it
+  * sees on the string path.
   */
 private[sources] final class CdcRowDecoder private (
     /** The wire schema version this decoder reads (the client's current
       * fields, by identity). */
     val wire: Seq[CdcField],
     typed: Boolean,
-    names: Array[SerializedString],
-    keyIndex: java.util.HashMap[String, Integer],
-    /** Per wire column: its planned position, or -1. */
-    plannedOf: Array[Int],
-    /** Per wire column: its output position, or -1 (unprojected or
-      * masked). */
-    outOf: Array[Int],
-    /** Per wire column: its output type's kind (`CdcRowDecoder.K*`). */
+    /** Per output column: its wire column, or -1 (masked). */
+    outW: Array[Int],
+    /** Per output column: its type's kind (`CdcRowDecoder.T*`). */
     kindOf: Array[Int],
-    dtOf: Array[DataType],
-    /** Per wire column: 0, 1, 2 for domain, server_id, sequence, or -1. */
-    gtidOf: Array[Int],
-    /** Per planned column: whether the pushed predicate reads it. */
-    predRef: Array[Boolean],
-    width: Int) {
+    dts: Array[DataType],
+    /** Wire columns of domain, server_id and sequence. */
+    gtidW: Array[Int],
+    /** Per planned column the pushed predicate reads: its wire column;
+      * -1 for the others. */
+    predW: Array[Int]) {
   import CdcRowDecoder._
-  import JsonToken._
+  import CdcLineScanner._
 
-  /** Domain, server_id and sequence of the last decoded row. */
+  /** Domain, server_id and sequence of the last taken row. */
   val gtid = new Array[Long](3)
-  /** The last decoded row. */
-  var row: InternalRow = _
-  /** Whether the last decoded row cast any field from its wire string. */
+  /** Whether the last built row cast any field from its wire string. */
   var slow = false
   /** Wire strings and null flags of the planned columns the predicate
     * reads, in planned order (other slots are stale). */
-  val predValues = new Array[String](predRef.length)
-  val predNulls = new Array[Boolean](predRef.length)
+  val predValues = new Array[String](predW.length)
+  val predNulls = new Array[Boolean](predW.length)
 
-  private val n = names.length
-  /** Row stamp per wire column: which keys this row has set. */
-  private val seenAt = new Array[Int](n)
-  private var stamp = 0
+  /** The scanner holding the last taken row. */
+  private var sc: CdcLineScanner = _
+  private var built: InternalRow = _
+  /** The scanner [[decode]] uses, made on first use. */
+  private var own: CdcLineScanner = _
 
-  /** Decode the JSON object `p` is positioned before, closing `p`; false
-    * when the row needs the string path (see the class doc). */
-  def decode(p: JsonParser): Boolean =
-    try {
-      // correctly rounded like the default parser, and faster
-      p.enable(JsonParser.Feature.USE_FAST_DOUBLE_PARSER)
-      if (p.nextToken() != START_OBJECT) return false
-      stamp += 1
-      slow = false
-      val out = new Array[Any](width)
-      var filled = 0
-      var expect = 0 // keys usually arrive in schema order
-      while (true) {
-        var w = -1
-        val t =
-          if (expect < n && p.nextFieldName(names(expect))) { w = expect; FIELD_NAME }
-          else if (expect < n) p.currentToken()
-          else p.nextToken()
-        if (t == END_OBJECT) {
-          if (filled != n) return false
-          row = new GenericInternalRow(out)
-          return true
-        }
-        if (t != FIELD_NAME) return false
-        if (w < 0) {
-          val k = keyIndex.get(p.currentName())
-          if (k != null) w = k.intValue
-        }
-        val vt = p.nextToken()
-        if (vt == START_OBJECT || vt == START_ARRAY) return false
-        if (w >= 0) {
-          expect = w + 1
-          if (seenAt(w) != stamp) { seenAt(w) = stamp; filled += 1 }
-          if (!field(p, vt, w, out)) return false
-        }
-      }
-      false
-    } catch {
-      case _: Exception => false
-    } finally p.close()
-
-  private def field(p: JsonParser, vt: JsonToken, w: Int, out: Array[Any]): Boolean = {
-    val isInt = vt == VALUE_NUMBER_INT
-    if (isInt) {
-      if (p.getNumberType == NumberType.BIG_INTEGER) return false
-    } else if (vt != VALUE_STRING && vt != VALUE_NUMBER_FLOAT && vt != VALUE_NULL &&
-        vt != VALUE_TRUE && vt != VALUE_FALSE) return false
-    val g = gtidOf(w)
-    if (g >= 0) {
-      if (!isInt) return false
-      gtid(g) = p.getLongValue
-    }
-    val pi = plannedOf(w)
-    if (pi >= 0 && predRef(pi)) {
-      if (vt == VALUE_NULL) { predValues(pi) = ""; predNulls(pi) = true }
-      else { predValues(pi) = text(p, vt); predNulls(pi) = false }
-    }
-    val j = outOf(w)
-    if (j >= 0) out(j) =
-      if (vt == VALUE_NULL) { if (typed) null else UTF8String.EMPTY_UTF8 }
-      else if (!typed) {
-        if (vt == VALUE_STRING) utf8(p) else UTF8String.fromString(text(p, vt))
-      }
-      else value(p, vt, kindOf(w), dtOf(w))
+  /** Take the row `s` just scanned: reads the GTID trio; false when one
+    * of its columns is not a JSON integer (the string path positions
+    * that row). The row stays readable until the client's next read. */
+  def take(s: CdcLineScanner): Boolean = {
+    if (s.kind(gtidW(0)) != KInt || s.kind(gtidW(1)) != KInt ||
+        s.kind(gtidW(2)) != KInt) return false
+    gtid(0) = s.long(gtidW(0))
+    gtid(1) = s.long(gtidW(1))
+    gtid(2) = s.long(gtidW(2))
+    sc = s
+    built = null
     true
   }
 
-  /** Typed value of a non-null scalar token. */
-  private def value(p: JsonParser, vt: JsonToken, kind: Int, dt: DataType): Any =
+  /** Scan, take and build the row in `b(off until off + len)` at once,
+    * filling [[predValues]]: false when the string path must decode it. */
+  def decode(b: Array[Byte], off: Int, len: Int): Boolean = {
+    if (own == null) own = new CdcLineScanner(wire)
+    if (!own.scan(b, off, len) || !take(own)) return false
+    fillPred()
+    row
+    true
+  }
+
+  /** `pred` over the wire strings of the taken row's columns it reads. */
+  def predicate(pred: WirePred): Boolean = {
+    fillPred()
+    pred.eval(predValues, predNulls)
+  }
+
+  private def fillPred(): Unit = {
+    var i = 0
+    while (i < predW.length) {
+      val w = predW(i)
+      if (w >= 0) {
+        val t = sc.text(w)
+        predNulls(i) = t == null
+        predValues(i) = if (t == null) "" else t
+      }
+      i += 1
+    }
+  }
+
+  /** The taken row, built on first call. */
+  def row: InternalRow = {
+    if (built == null) {
+      slow = false
+      val out = new Array[Any](outW.length)
+      var j = 0
+      while (j < outW.length) {
+        val w = outW(j)
+        if (w >= 0) out(j) =
+          if (sc.kind(w) == KNull) { if (typed) null else UTF8String.EMPTY_UTF8 }
+          else if (!typed) sc.utf8(w)
+          else value(w, kindOf(j), dts(j))
+        j += 1
+      }
+      built = new GenericInternalRow(out)
+    }
+    built
+  }
+
+  /** Typed value of wire column `w` (not JSON null). */
+  private def value(w: Int, kind: Int, dt: DataType): Any = {
+    val s = sc
+    val k = s.kind(w)
     kind match {
-      case KString =>
-        if (vt == VALUE_STRING) utf8(p) else UTF8String.fromString(text(p, vt))
-      case KLong | KInt | KShort | KByte =>
-        if (vt != VALUE_NUMBER_INT) cast(p, vt, dt)
+      case TString => s.utf8(w)
+      case TLong | TInt | TShort | TByte =>
+        if (k != KInt) cast(w, dt)
         else {
-          val l = p.getLongValue
+          val l = s.long(w)
           kind match {
-            case KLong => l
-            case KInt => if (l >= Int.MinValue && l <= Int.MaxValue) l.toInt else null
-            case KShort => if (l >= Short.MinValue && l <= Short.MaxValue) l.toShort else null
+            case TLong => l
+            case TInt => if (l >= Int.MinValue && l <= Int.MaxValue) l.toInt else null
+            case TShort => if (l >= Short.MinValue && l <= Short.MaxValue) l.toShort else null
             case _ => if (l >= Byte.MinValue && l <= Byte.MaxValue) l.toByte else null
           }
         }
-      case KDouble =>
-        if (vt == VALUE_NUMBER_INT) p.getLongValue.toDouble
-        else if (vt == VALUE_NUMBER_FLOAT) {
-          val d = p.getDoubleValue
+      case TDouble =>
+        if (k == KInt) s.long(w).toDouble
+        else if (k == KReal) {
+          val d = s.real(w)
           if (d == 0.0) 0.0 else d // the wire text of -0.0 is "0"
         }
-        else cast(p, vt, dt)
-      case KFloat =>
-        if (vt == VALUE_NUMBER_INT) p.getLongValue.toFloat
+        else cast(w, dt)
+      case TFloat =>
+        if (k == KInt) s.long(w).toFloat
         // from the wire text: rounding the double to float directly can
         // differ from rounding its decimal text
-        else if (vt == VALUE_NUMBER_FLOAT)
-          java.lang.Float.parseFloat(CdcClient.doubleText(p.getDoubleValue))
-        else cast(p, vt, dt)
-      case KDecimal =>
+        else if (k == KReal) java.lang.Float.parseFloat(CdcClient.doubleText(s.real(w)))
+        else cast(w, dt)
+      case TDecimal =>
         val d =
-          if (vt == VALUE_NUMBER_INT) decimalOf(p.getLongValue, dt.asInstanceOf[DecimalType])
-          else if (vt == VALUE_NUMBER_FLOAT)
-            decimalOf(p.getDoubleValue, dt.asInstanceOf[DecimalType])
+          if (k == KInt) decimalOf(s.long(w), dt.asInstanceOf[DecimalType])
+          else if (k == KReal) decimalOf(s.real(w), dt.asInstanceOf[DecimalType])
           else Inexact
-        if (d ne Inexact) d else cast(p, vt, dt)
-      case KWideDecimal if vt == VALUE_NUMBER_INT =>
+        if (d ne Inexact) d else cast(w, dt)
+      case TWideDecimal if k == KInt =>
         val d = dt.asInstanceOf[DecimalType]
-        try Decimal(BigDecimal(p.getLongValue), d.precision, d.scale)
+        try Decimal(BigDecimal(s.long(w)), d.precision, d.scale)
         catch { case _: ArithmeticException => null }
-      case KBoolean if vt == VALUE_TRUE => true
-      case KBoolean if vt == VALUE_FALSE => false
-      case KDate if vt == VALUE_STRING =>
-        SqlTypes.epochDay(p.getTextCharacters, p.getTextOffset, p.getTextLength)
-      case KTimestamp if vt == VALUE_STRING =>
-        SqlTypes.timestampMicros(p.getTextCharacters, p.getTextOffset, p.getTextLength)
-      case KBinary => text(p, vt).getBytes(UTF_8)
-      case _ => cast(p, vt, dt)
+      case TBoolean if k == KTrue => true
+      case TBoolean if k == KFalse => false
+      case TDate if s.plain(w) => SqlTypes.epochDay(s.buffer, s.offset(w), s.size(w))
+      case TTimestamp if s.plain(w) =>
+        SqlTypes.timestampMicros(s.buffer, s.offset(w), s.size(w))
+      case TDate | TTimestamp if k == KEsc => SqlTypes.cast(s.text(w), isNull = false, dt)
+      case TBinary => s.bytes(w)
+      case _ => cast(w, dt)
     }
+  }
 
   /** The string path for one field: wire text, then [[SqlTypes.cast]]. */
-  private def cast(p: JsonParser, vt: JsonToken, dt: DataType): Any = {
+  private def cast(w: Int, dt: DataType): Any = {
     slow = true
-    SqlTypes.cast(text(p, vt), isNull = false, dt)
+    SqlTypes.cast(sc.text(w), isNull = false, dt)
   }
 }
 
 private[sources] object CdcRowDecoder {
-  import JsonToken._
-
-  private final val KString = 0
-  private final val KLong = 1
-  private final val KInt = 2
-  private final val KShort = 3
-  private final val KByte = 4
-  private final val KDouble = 5
-  private final val KFloat = 6
+  private final val TString = 0
+  private final val TLong = 1
+  private final val TInt = 2
+  private final val TShort = 3
+  private final val TByte = 4
+  private final val TDouble = 5
+  private final val TFloat = 6
   /** Decimal of precision 18 or less: an unscaled long. */
-  private final val KDecimal = 7
-  private final val KWideDecimal = 8
-  private final val KBoolean = 9
-  private final val KDate = 10
-  private final val KTimestamp = 11
-  private final val KBinary = 12
-  private final val KOther = 13
+  private final val TDecimal = 7
+  private final val TWideDecimal = 8
+  private final val TBoolean = 9
+  private final val TDate = 10
+  private final val TTimestamp = 11
+  private final val TBinary = 12
+  private final val TOther = 13
 
   private def kindOf(dt: DataType): Int = dt match {
-    case StringType => KString
-    case LongType => KLong
-    case IntegerType => KInt
-    case ShortType => KShort
-    case ByteType => KByte
-    case DoubleType => KDouble
-    case FloatType => KFloat
-    case d: DecimalType => if (d.precision <= 18) KDecimal else KWideDecimal
-    case BooleanType => KBoolean
-    case DateType => KDate
-    case TimestampType => KTimestamp
-    case BinaryType => KBinary
-    case _ => KOther
+    case StringType => TString
+    case LongType => TLong
+    case IntegerType => TInt
+    case ShortType => TShort
+    case ByteType => TByte
+    case DoubleType => TDouble
+    case FloatType => TFloat
+    case d: DecimalType => if (d.precision <= 18) TDecimal else TWideDecimal
+    case BooleanType => TBoolean
+    case DateType => TDate
+    case TimestampType => TTimestamp
+    case BinaryType => TBinary
+    case _ => TOther
   }
 
-  /** Compile the decoder for wire schema version `wire`. `planned` is the
-    * schema the scan was planned against and must be contained in
+  /** Compile the replay decoder for wire schema version `wire`. `planned`
+    * is the schema the scan was planned against and must be contained in
     * `wire` by name; `dts`, `projection` and `mask` describe the output
     * as [[CdcRowCodec.toInternalRow]] takes them; `pred` is the pushed
     * predicate over planned positions; `gtidIdx` holds the planned
@@ -250,56 +236,22 @@ private[sources] object CdcRowDecoder {
     val wireOf = planned.map(f => names.indexOf(f.name)).toArray
     require(!wireOf.contains(-1),
       s"wire schema $wire lacks a planned column of $planned")
-    val n = wire.length
-    val plannedOf = Array.fill(n)(-1)
-    wireOf.zipWithIndex.foreach { case (w, i) => plannedOf(w) = i }
-    val outOf = Array.fill(n)(-1)
-    val kinds = Array.fill(n)(KOther)
-    val dtOf = new Array[DataType](n)
-    dts.indices.foreach { j =>
-      if (mask == null || mask(j)) {
-        val w = wireOf(if (projection == null) j else projection(j))
-        outOf(w) = j
-        kinds(w) = kindOf(dts(j))
-        dtOf(w) = dts(j)
-      }
-    }
-    val gtidOf = Array.fill(n)(-1)
-    gtidOf(wireOf(gtidIdx._1)) = 0
-    gtidOf(wireOf(gtidIdx._2)) = 1
-    gtidOf(wireOf(gtidIdx._3)) = 2
-    val predRef = new Array[Boolean](planned.length)
-    if (pred != null) WirePred.refs(pred).foreach(predRef(_) = true)
-    val keyIndex = new java.util.HashMap[String, Integer]()
-    names.zipWithIndex.foreach { case (k, i) => keyIndex.put(k, i) }
-    new CdcRowDecoder(wire, typed, names.map(new SerializedString(_)).toArray,
-      keyIndex, plannedOf, outOf, kinds, dtOf, gtidOf, predRef, dts.length)
+    val outW = dts.indices.map { j =>
+      if (mask != null && !mask(j)) -1
+      else wireOf(if (projection == null) j else projection(j))
+    }.toArray
+    val predW = Array.fill(planned.length)(-1)
+    if (pred != null) WirePred.refs(pred).foreach(i => predW(i) = wireOf(i))
+    new CdcRowDecoder(wire, typed, outW, dts.map(kindOf), dts,
+      Array(wireOf(gtidIdx._1), wireOf(gtidIdx._2), wireOf(gtidIdx._3)), predW)
   }
 
-  /** [[CdcClient.scalarToString]] of a scalar token (never null). */
-  private def text(p: JsonParser, vt: JsonToken): String = vt match {
-    case VALUE_STRING => p.getText
-    case VALUE_NUMBER_INT => java.lang.Long.toString(p.getLongValue)
-    case VALUE_NUMBER_FLOAT => CdcClient.doubleText(p.getDoubleValue)
-    case VALUE_TRUE => "true"
-    case _ => "false"
-  }
-
-  /** `UTF8String.fromString(p.getText)`, without the String for ASCII. */
-  private def utf8(p: JsonParser): UTF8String = {
-    val a = p.getTextCharacters
-    val off = p.getTextOffset
-    val len = p.getTextLength
-    val b = new Array[Byte](len)
-    var i = 0
-    while (i < len) {
-      val c = a(off + i)
-      if (c >= 0x80) return UTF8String.fromString(new String(a, off, len))
-      b(i) = c.toByte
-      i += 1
-    }
-    UTF8String.fromBytes(b)
-  }
+  /** The tailer's decoder for wire schema version `wire`: the GTID trio
+    * at wire positions `gtidIdx`, and nothing else. */
+  def positions(wire: Seq[CdcField], gtidIdx: (Int, Int, Int)): CdcRowDecoder =
+    new CdcRowDecoder(wire, typed = false, Array.emptyIntArray, Array.emptyIntArray,
+      Array.empty[DataType], Array(gtidIdx._1, gtidIdx._2, gtidIdx._3),
+      Array.emptyIntArray)
 
   private val Pow10L: Array[Long] = Array.iterate(1L, 19)(_ * 10)
 

@@ -25,9 +25,13 @@ private[sources] object CdcSplitProbe {
   * trimming) and each batch's rows are re-read executor-side by
   * [[CdcReplayReader]] replaying `REQUEST-DATA table gtid` for its range —
   * the reference's own resume semantics (cdc_connector.cpp:199-213) make
-  * that replay loss-free. Only schemas WITHOUT domain/server_id/sequence
-  * (no server-side resume token) fall back to buffering decoded rows on
-  * the driver.
+  * that replay loss-free. In that mode the tailer reads positions only:
+  * each row is scanned in the client's buffer and only its GTID trio is
+  * read, as primitive longs ([[CdcRowDecoder.positions]]); a row the
+  * scan declines is decoded in full by the tree path and positioned from
+  * its strings, with the same checks and errors. Only schemas WITHOUT
+  * domain/server_id/sequence (no server-side resume token) fall back to
+  * buffering fully decoded rows here.
   *
   * The server replays from the requested GTID *inclusive*; events at or
   * before `resumeAfter` are skipped here, which is what makes micro-batch
@@ -113,11 +117,26 @@ final class CdcTailer(
     * (auth, ERR replies, schema drift) stay fatal. */
   private val MaxReconnects = 3
 
+  /** The live connection, read for the scan counters, and the totals of
+    * the connections already closed. */
+  @volatile private var live: CdcClient = _
+  @volatile private var closedScanned, closedBytes, closedDeclined = 0L
+
+  /** Rows the byte-level scan positioned, their bytes, and the rows it
+    * declined to the tree path, over the tailer's connections. */
+  def scannedRows: Long = closedScanned + { val c = live; if (c == null) 0L else c.scannedRows }
+  def scannedBytes: Long = closedBytes + { val c = live; if (c == null) 0L else c.scannedBytes }
+  def declinedRows: Long = closedDeclined + { val c = live; if (c == null) 0L else c.declinedRows }
+
   override def run(): Unit = {
     var reconnects = 0
     var sawSchema = false
     while (running) {
       val client = new CdcClient(host, port, user, password, timeoutMs)
+      live = client
+      // replay mode: the positions-only decoder of the connection's
+      // current schema version
+      var dec: CdcRowDecoder = null
       try {
         // resume from the furthest delivered position (dedupe below makes
         // the server's inclusive replay idempotent); vector mode resumes
@@ -168,7 +187,12 @@ final class CdcTailer(
           while (running && lock.synchronized(positions.length) >= maxBuffered)
             Thread.sleep(10)
           if (!running) throw new InterruptedException
-          client.readMessage() match {
+          client.readMessage(dec) match {
+            case null => // a row the positions decoder took
+              val p = dec.gtid
+              onEvent(checkOrder(Gtid(p(0), p(1), p(2))), null, from, overlapPending,
+                failSkippedReplay)
+              reconnects = 0
             case CdcSchemaMsg(fields, _) =>
               if (tolerateReSchema) {
                 // normalized mode: any schema version works as long as the
@@ -197,9 +221,10 @@ final class CdcTailer(
                 throw new CdcProtocolException(
                   "mid-stream schema change detected; restart the query to adopt " +
                     s"the new schema (was $expectedFields, now $fields)")
+              if (hasGtidColumns)
+                dec = gtidIdxOf(fields).map(CdcRowDecoder.positions(fields, _)).orNull
             case m: CdcRowMsg =>
               val values = m.values
-              val nulls = m.nulls
               // a row missing one of its GTID columns cannot be
               // positioned — raise the delivery error immediately.
               // (missingKey names only the FIRST absent key in schema
@@ -208,39 +233,7 @@ final class CdcTailer(
               if (m.missingKey != null && gtidIdx.exists { case (d, s, q) =>
                   m.slotMissing(d) || m.slotMissing(s) || m.slotMissing(q) })
                 m.requireComplete()
-              val g = eventGtid(values)
-              if (domainVector) lock.synchronized {
-                // per-domain inclusive-replay dedupe: a (re)connect
-                // replays from the vector head's LOG position, which
-                // re-delivers events at-or-below the OTHER domains'
-                // watermarks — each domain's floor drops its own
-                val floor = perDomain.get(g.domain)
-                if (overlapPending.contains(g.domain)) {
-                  // self-check trigger (a): within one domain the log is
-                  // sequence-ordered, so the first post-resume event at
-                  // or below the watermark proves the replay covered
-                  // this domain's suffix; one PAST it proves a skip
-                  if (floor != null && g > floor)
-                    failSkippedReplay(s"${g.domain} (first event $g is " +
-                      s"already past watermark $floor)")
-                  overlapPending.remove(g.domain)
-                }
-                if (floor == null || g > floor) {
-                  positions += g
-                  perDomain.remove(g.domain)
-                  perDomain.put(g.domain, g) // to tail: latest arrival
-                  lastGtid = Some(g)
-                }
-              }
-              // inclusive-replay dedupe on resume/reconnect
-              else if (from.orElse(resumeAfter).forall(g > _)) lock.synchronized {
-                // replay mode keeps POSITIONS only (the executor re-reads
-                // and enforces completeness at emit); synthetic mode
-                // buffers the row itself = delivery → reference A10 error
-                if (!hasGtidColumns) { m.requireComplete(); rows += CdcEvent(g, values, nulls) }
-                positions += g
-                lastGtid = Some(g)
-              }
+              onEvent(eventGtid(values), m, from, overlapPending, failSkippedReplay)
               reconnects = 0 // healthy stream resets the budget
             case CdcTimeout =>
               // self-check trigger (b): the expected overlap sits BEFORE
@@ -270,9 +263,54 @@ final class CdcTailer(
       } catch {
         case t: Throwable if running => fatal = t; running = false
         case _: Throwable => running = false // shutdown race
-      } finally client.close()
+      } finally {
+        client.close()
+        closedScanned += client.scannedRows
+        closedBytes += client.scannedBytes
+        closedDeclined += client.declinedRows
+        live = null
+      }
     }
   }
+
+  /** Record one positioned event `g`; `m` is its decoded row, or null
+    * when only its position was read (replay mode). `from` is the
+    * connection's replay request point, `overlapPending` and `failSkipped`
+    * the vector-mode resume self-check's state. */
+  private def onEvent(g: Gtid, m: CdcRowMsg, from: Option[Gtid],
+      overlapPending: java.util.HashSet[Long], failSkipped: String => Nothing): Unit =
+    if (domainVector) lock.synchronized {
+      // per-domain inclusive-replay dedupe: a (re)connect
+      // replays from the vector head's LOG position, which
+      // re-delivers events at-or-below the OTHER domains'
+      // watermarks — each domain's floor drops its own
+      val floor = perDomain.get(g.domain)
+      if (overlapPending.contains(g.domain)) {
+        // self-check trigger (a): within one domain the log is
+        // sequence-ordered, so the first post-resume event at
+        // or below the watermark proves the replay covered
+        // this domain's suffix; one PAST it proves a skip
+        if (floor != null && g > floor)
+          failSkipped(s"${g.domain} (first event $g is " +
+            s"already past watermark $floor)")
+        overlapPending.remove(g.domain)
+      }
+      if (floor == null || g > floor) {
+        positions += g
+        perDomain.remove(g.domain)
+        perDomain.put(g.domain, g) // to tail: latest arrival
+        lastGtid = Some(g)
+      }
+    }
+    // inclusive-replay dedupe on resume/reconnect
+    else if (from.orElse(resumeAfter).forall(g > _)) lock.synchronized {
+      // replay mode keeps POSITIONS only (the executor re-reads
+      // and enforces completeness at emit); synthetic mode
+      // buffers the row itself = delivery → reference A10 error
+      if (!hasGtidColumns) { m.requireComplete(); rows += CdcEvent(g, m.values, m.nulls) }
+      positions += g
+      lastGtid = Some(g)
+    }
 
   /** Domain pinned by the resume position or the first event. GTID order
     * is `(domain, sequence, serverId)` (see [[Gtid]]), so a domain SWITCH
@@ -297,27 +335,32 @@ final class CdcTailer(
           s"event carries a null/empty GTID column (domain='${values(d)}', " +
             s"server_id='${values(s)}', sequence='${values(q)}') — the row " +
             "cannot be positioned for replay/resume")
-      val g = Gtid(values(d).toLong, values(s).toLong, values(q).toLong)
-      // vector mode tracks one watermark per domain — interleaves are
-      // the point, so the single-triple order guard does not apply
-      if (domainVector) return g
-      streamDomain match {
-        case Some(dom) if dom != g.domain =>
-          if (lastGtid.exists(g < _))
-            throw new CdcProtocolException(
-              s"multi-domain stream: event ${g} arrived after ${lastGtid.get} " +
-                s"(domain switch $dom → ${g.domain} breaks GTID order) — " +
-                "interleaved replication domains have no total order under " +
-                "one GTID; use domainMode=vector (per-domain watermarks) " +
-                "or one query per domain")
-          streamDomain = Some(g.domain)
-        case None => streamDomain = Some(g.domain)
-        case _ => ()
-      }
-      g
+      checkOrder(Gtid(values(d).toLong, values(s).toLong, values(q).toLong))
     case None =>
       syntheticSeq += 1
       Gtid(0, 0, syntheticSeq)
+  }
+
+  /** The single-triple order guard (see [[streamDomain]]): `g`, or a
+    * failure when it switches domain against the GTID order. */
+  private def checkOrder(g: Gtid): Gtid = {
+    // vector mode tracks one watermark per domain — interleaves are
+    // the point, so the single-triple order guard does not apply
+    if (domainVector) return g
+    streamDomain match {
+      case Some(dom) if dom != g.domain =>
+        if (lastGtid.exists(g < _))
+          throw new CdcProtocolException(
+            s"multi-domain stream: event ${g} arrived after ${lastGtid.get} " +
+              s"(domain switch $dom → ${g.domain} breaks GTID order) — " +
+              "interleaved replication domains have no total order under " +
+              "one GTID; use domainMode=vector (per-domain watermarks) " +
+              "or one query per domain")
+        streamDomain = Some(g.domain)
+      case None => streamDomain = Some(g.domain)
+      case _ => ()
+    }
+    g
   }
 
   def checkFatal(): Unit = if (fatal != null) throw fatal

@@ -587,6 +587,11 @@ private[cdc] abstract class CdcTableStream(schema: StructType, opts: CdcOptions,
     m.put("bufferedEvents", if (t == null) "0" else t.bufferedCount.toString)
     m.put("pushdownFilterActive", (runtimePred != null || wirePred != null).toString)
     m.put("decodeSkipActive", (runtimeMask != null).toString)
+    if (t != null) {
+      m.put("tailerScannedRows", t.scannedRows.toString)
+      m.put("tailerScannedBytes", t.scannedBytes.toString)
+      m.put("tailerDeclinedRows", t.declinedRows.toString)
+    }
     m
   }
 }
@@ -803,7 +808,9 @@ class CdcPartitionReaderFactory(schema: StructType, typed: Boolean,
           // every row here is cast from driver-decoded wire strings
           Array(CdcTaskMetric(CdcMetrics.FilteredRows, nFiltered),
             CdcTaskMetric(CdcMetrics.DecodedRows, nEmitted),
-            CdcTaskMetric(CdcMetrics.SlowPathRows, nEmitted))
+            CdcTaskMetric(CdcMetrics.SlowPathRows, nEmitted),
+            // the tailer framed these rows; the task reads none off the wire
+            CdcTaskMetric(CdcMetrics.WireBytes, 0L))
         override def close(): Unit = ()
       }
       case other => throw new IllegalArgumentException(

@@ -1,5 +1,6 @@
 package graft.sources.cdc
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 
 import org.apache.spark.sql.types._
@@ -80,7 +81,7 @@ object SqlTypes {
   private final val NotCanonical = Long.MinValue
 
   /** Two ASCII digits at `i`, or -1. */
-  private def digits2(a: Array[Char], i: Int): Int = {
+  private def digits2(a: Array[Byte], i: Int): Int = {
     val x = a(i) - '0'
     val y = a(i + 1) - '0'
     if (x < 0 || x > 9 || y < 0 || y > 9) -1 else x * 10 + y
@@ -91,7 +92,7 @@ object SqlTypes {
     * (signs, longer years, year 0, Feb 30, month 13, ...) is
     * [[NotCanonical]], because the two java.time parsers disagree there
     * (DATE resolves STRICT, DATETIME resolves SMART and clamps the day). */
-  private def canonicalDay(a: Array[Char], off: Int): Long = {
+  private def canonicalDay(a: Array[Byte], off: Int): Long = {
     if (a(off + 4) != '-' || a(off + 7) != '-') return NotCanonical
     val hi = digits2(a, off)
     val lo = digits2(a, off + 2)
@@ -99,15 +100,22 @@ object SqlTypes {
     val d = digits2(a, off + 8)
     if (hi < 0 || lo < 0 || m < 1 || m > 12 || d < 1) return NotCanonical
     val y = hi * 100 + lo
-    if (y == 0 || d > java.time.Month.of(m).length(java.time.Year.isLeap(y)))
-      return NotCanonical
-    LocalDate.of(y, m, d).toEpochDay
+    val leap = (y & 3) == 0 && (y % 100 != 0 || y % 400 == 0)
+    if (y == 0 || d > (if (m == 2 && leap) 29 else DaysIn(m - 1))) return NotCanonical
+    // LocalDate.of(y, m, d).toEpochDay, by the days-from-civil formula
+    val yy = if (m <= 2) y - 1 else y
+    val era = yy / 400
+    val yoe = yy - era * 400
+    val doy = (153 * (if (m > 2) m - 3 else m + 9) + 2) / 5 + d - 1
+    era * 146097L + yoe * 365 + yoe / 4 - yoe / 100 + doy - 719468
   }
+
+  private val DaysIn = Array(31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31)
 
   /** Microseconds of a canonical `yyyy-MM-dd[ HH:mm:ss[.f{1,6}]]`, every
     * field in range; anything else is [[NotCanonical]] (hour 24, a bare
     * '.', seven fraction digits, trailing text, ...). */
-  private def canonicalMicros(a: Array[Char], off: Int, len: Int): Long = {
+  private def canonicalMicros(a: Array[Byte], off: Int, len: Int): Long = {
     if (len != 10 && len != 19 && (len < 21 || len > 26)) return NotCanonical
     val day = canonicalDay(a, off)
     if (day == NotCanonical) return NotCanonical
@@ -135,26 +143,31 @@ object SqlTypes {
     micros
   }
 
-  /** DATE wire text → epoch day (Int), or null when unparseable. A
-    * canonical date takes the digit parser; any other text goes through
-    * `LocalDate.parse`, so the result is java.time's by construction. */
-  private[cdc] def epochDay(a: Array[Char], off: Int, len: Int): Any = {
+  /** DATE wire text → epoch day (Int), or null when unparseable. `a(off
+    * until off + len)` holds the text's UTF-8, and `text` the text itself
+    * (null: decode the bytes). A canonical date takes the digit parser;
+    * any other text goes through `LocalDate.parse`, so the result is
+    * java.time's by construction. */
+  private[cdc] def epochDay(a: Array[Byte], off: Int, len: Int, text: String = null): Any = {
     val d = if (len == 10) canonicalDay(a, off) else NotCanonical
     if (d != NotCanonical) d.toInt
-    else try LocalDate.parse(new String(a, off, len)).toEpochDay.toInt
+    else try LocalDate.parse(if (text != null) text else new String(a, off, len, UTF_8))
+      .toEpochDay.toInt
     catch { case _: RuntimeException => null }
   }
 
   /** DATETIME/TIMESTAMP wire text → microseconds since the epoch (UTC),
-    * or null when unparseable. A canonical value takes the digit parser;
-    * any other text goes through [[DateTimeFmt]] and its SMART resolver
-    * (which clamps Feb 30 and rolls 24:00:00 over), so the result is
-    * java.time's by construction. */
-  private[cdc] def timestampMicros(a: Array[Char], off: Int, len: Int): Any = {
+    * or null when unparseable; the arguments are [[epochDay]]'s. A
+    * canonical value takes the digit parser; any other text goes through
+    * [[DateTimeFmt]] and its SMART resolver (which clamps Feb 30 and
+    * rolls 24:00:00 over), so the result is java.time's by construction. */
+  private[cdc] def timestampMicros(a: Array[Byte], off: Int, len: Int,
+      text: String = null): Any = {
     val m = canonicalMicros(a, off, len)
     if (m != NotCanonical) m
     else try {
-      val ldt = LocalDateTime.parse(new String(a, off, len), DateTimeFmt)
+      val ldt = LocalDateTime.parse(
+        if (text != null) text else new String(a, off, len, UTF_8), DateTimeFmt)
       ldt.toEpochSecond(ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L
     } catch { case _: RuntimeException => null }
   }
@@ -165,8 +178,8 @@ object SqlTypes {
     * like Spark's PERMISSIVE JSON mode).
     *
     * This is the semantics of record for typed values. The replay
-    * reader's [[CdcRowDecoder]] writes most values straight from JSON
-    * tokens and must equal this function on the token's wire string; a
+    * reader's [[CdcRowDecoder]] writes most values straight from the
+    * scanned row and must equal this function on the value's wire string; a
     * token/column pair it has no exact native rule for is rendered to
     * that string and passed through here. DATE and DATETIME share the
     * decoder's digit parser ([[epochDay]], [[timestampMicros]]). */
@@ -183,9 +196,10 @@ object SqlTypes {
       case DoubleType    => value.toDouble
       case d: DecimalType =>
         org.apache.spark.sql.types.Decimal(BigDecimal(value), d.precision, d.scale)
-      case DateType      => val a = value.toCharArray; epochDay(a, 0, a.length)
-      case TimestampType => val a = value.toCharArray; timestampMicros(a, 0, a.length)
-      case BinaryType    => value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      case DateType      => val a = value.getBytes(UTF_8); epochDay(a, 0, a.length, value)
+      case TimestampType =>
+        val a = value.getBytes(UTF_8); timestampMicros(a, 0, a.length, value)
+      case BinaryType    => value.getBytes(UTF_8)
       case _             => UTF8String.fromString(value)
     } catch { case _: RuntimeException | _: java.time.DateTimeException => null }
   }

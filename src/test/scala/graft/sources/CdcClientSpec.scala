@@ -104,6 +104,35 @@ class CdcClientSpec extends AnyFunSuite {
     }
   }
 
+  test("jansson-style spaced separators decode like compact ones") {
+    val spaced = """{"domain": 0, "server_id": 1, "sequence": 1, "event_number": 1, """ +
+      """"timestamp": 1700000001, "event_type": "insert", "id": 7, "name": "a b"}"""
+    val srv = new MockMaxScaleServer(Schema, Seq(spaced, event(2, "insert", 8, "c")))
+    withServer(srv) { srv =>
+      connected(srv) { c =>
+        c.requestData("db.t", None)
+        assert(c.readMessage().isInstanceOf[CdcSchemaMsg])
+        val r = c.readMessage().asInstanceOf[CdcRowMsg]
+        assert(r.values.toSeq == Seq("0", "1", "1", "1", "1700000001", "insert", "7", "a b"))
+        assert(r.missingKey == null && !r.nulls.exists(identity))
+        assert(c.readMessage().asInstanceOf[CdcRowMsg].values(7) == "c")
+      }
+    }
+  }
+
+  test("raw non-ASCII UTF-8 in a value decodes to the same text") {
+    val name = "caf\u00e9 \u4e2d\u6587 \ud83d\ude00 \u00df"
+    val srv = new MockMaxScaleServer(Schema, Seq(event(1, "insert", 1, name)))
+    withServer(srv) { srv =>
+      connected(srv) { c =>
+        c.requestData("db.t", None)
+        assert(c.readMessage().isInstanceOf[CdcSchemaMsg])
+        val r = c.readMessage().asInstanceOf[CdcRowMsg]
+        assert(r.values(7) == name && !r.nulls(7))
+      }
+    }
+  }
+
   test("rows far larger than the read buffer are framed correctly") {
     val big = "x" * 300000 // ≫ the 32 KiB socket buffer
     val srv = new MockMaxScaleServer(Schema, Seq(

@@ -184,6 +184,11 @@ final class MockMaxScaleServer(
       val fromLogIdx: Int =
         if (gtidComparisonReplay || fromPos._1 == Long.MinValue) -1
         else evList.asScala.toVector.indexWhere(e => posOf(e) == fromPos)
+      // events go out in buffered writes, flushed before every wait and
+      // every injected close, so a fast client is not paced by one
+      // syscall per event; what a client receives, and when a drop
+      // happens relative to it, is unchanged
+      val stream = new java.io.BufferedOutputStream(out, 64 * 1024)
       while (running && !s.isClosed) {
         // pick up new events as they are pushed
         val snapshot = evList.asScala.toVector
@@ -199,18 +204,19 @@ final class MockMaxScaleServer(
           if (atOrPast || pos._2 == Long.MinValue) {
             midStreamSchemaAfter.foreach { case (n, s2) =>
               if (sent == n && !schemaSwapped) {
-                write(out, s2 + "\n"); schemaSwapped = true
+                stream.write((s2 + "\n").getBytes(UTF_8)); schemaSwapped = true
                 // the DDL changed the table: future connections (schema
                 // probes, reconnects, replays) see the new schema up front
                 schema = s2
               }
             }
-            closeAfterEvents.foreach { n => if (sent >= n) { s.close(); return } }
-            if (sent >= dropAfter) { s.close(); return } // injected fault
-            write(out, ev + "\n")
+            closeAfterEvents.foreach { n => if (sent >= n) { stream.flush(); s.close(); return } }
+            if (sent >= dropAfter) { stream.flush(); s.close(); return } // injected fault
+            stream.write((ev + "\n").getBytes(UTF_8))
             sent += 1
           }
         }
+        stream.flush()
         // poll for CLOSE from the client without busy-waiting
         try {
           val cmd = readChunk(in)

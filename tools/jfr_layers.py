@@ -35,9 +35,12 @@ import sys
 # (layer, frame prefixes); a frame is "package.Class.method", and the
 # first layer listing a prefix of it wins
 LAYERS = [
+    # the byte-level scan and its decoders; Jackson only parses the lines
+    # the scan declines (the tree path), and counts here too
     ("decode", (
-        "com.fasterxml.jackson.",
+        "graft.sources.cdc.CdcLineScanner",
         "graft.sources.cdc.CdcRowDecoder",
+        "com.fasterxml.jackson.",
         "graft.sources.cdc.CdcClient.decodeRow",
         "graft.sources.cdc.CdcClient$.scalarToString",
         "graft.sources.cdc.CdcClient$.doubleText",
@@ -45,8 +48,10 @@ LAYERS = [
     ("cast", (
         "graft.sources.cdc.SqlTypes",
     )),
+    # finding line ends, and the socket reads under them
     ("framing", (
         "graft.sources.cdc.CdcClient.readLineSlice",
+        "graft.sources.cdc.CdcClient$.newline",
         "graft.sources.cdc.CdcClient.ensureRoom",
     )),
     ("reader", (
