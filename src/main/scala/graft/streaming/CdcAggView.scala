@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -27,11 +26,12 @@ import org.apache.spark.sql.types.DecimalType
   * PRE-merge state to compute diffs), then state — a crash between the
   * two re-runs only the idempotent half.
   *
-  * Scale: the diff join touches |batch keys| stored rows (bucket-pruned
-  * under [[CdcSink.applyChangelogBucketed]]'s layout), the view merge
-  * touches |touched groups| rows; nothing scans the full table. This is
-  * the q_agg_stats scaladoc's "power sums merge associatively" turned
-  * into a running pipeline.
+  * Scale: the diff join reads the whole stored state through
+  * [[CdcSink.readStoredState]] (base and deltas merged per key when the
+  * state has deltas), so its cost follows the table, not the batch; the
+  * view merge touches |touched groups| rows. This is the q_agg_stats
+  * scaladoc's "power sums merge associatively" turned into a running
+  * pipeline.
   */
 object CdcAggView {
 
@@ -52,15 +52,11 @@ object CdcAggView {
       valueCol: String): Unit = {
     val spark = batch.sparkSession
     if (IndexFiles.lastApplied(aggDir) < batchId) {
-      val w = Window.partitionBy(col(keyCol))
-        .orderBy(orderCols.map(col(_).desc): _*)
-      val delta = batch
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
+      val delta = CdcSink.latestPerKey(batch, keyCol, orderCols)
 
       val stored =
         if (java.nio.file.Files.exists(java.nio.file.Paths.get(stateDir)))
-          spark.read.schema(batch.schema).parquet(stateDir)
+          CdcSink.readStoredState(spark, stateDir, Some(batch.schema))
         else batch.limit(0)
 
       // rename the stored side up front: `stored` can share delta's plan

@@ -104,4 +104,29 @@ class CdcAggViewSpec extends SparkSpec {
     apply(b1, 99L, st, ag)
     assert(viewSet(ag) == after)
   }
+
+  test("view stays exact while the state's batches land as deltas") {
+    val st = freshDir(); val ag = freshDir()
+    val groups = Vector("a", "b", "c")
+    // a 1,200-key base, so the small batches below land as delta files
+    apply((1L to 1200L).map(k =>
+      EvV(k, k, ts(0), groups((k % 3).toInt), (k % 100) + 0.25)), 0L, st, ag)
+    def exact(): Set[(String, Long, String, String)] = recompute(st)
+      .collect().map(r => (r.getString(0), r.getLong(1),
+        r.getDecimal(2).toPlainString, r.getDecimal(3).toPlainString)).toSet
+    val batches = Seq(
+      // group-moving updates
+      Seq(EvV(2001, 1, ts(1), "c", 9.75), EvV(2002, 2, ts(1), "a", 1.50)),
+      // user 1 again (its stored row is now a delta row) and a new user
+      Seq(EvV(2003, 1, ts(2), "a", 3.00), EvV(2004, 1300, ts(2), "b", 7.25)),
+      // newer than user 2's base row, older than its delta row: no change
+      Seq(EvV(1500, 2, ts(0), "c", 5.00)),
+      Seq(EvV(2005, 3, ts(3), "b", 0.50), EvV(2006, 4, ts(3), "b", 12.00)))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      apply(b, i + 1L, st, ag)
+      assert(CdcSink.generation(st).deltas.size == i + 1,
+        s"batch $i did not land as a delta")
+      assert(viewSet(ag) == exact(), s"view diverged after batch $i")
+    }
+  }
 }

@@ -34,6 +34,26 @@ object TransactionalFakeSwap extends TableSwap {
   }
 }
 
+/** Test-only TableSwap wrapper that records the files of the staging
+  * generation at the moment its write callback throws, then rethrows:
+  * it shows where in the write a failure struck. */
+final class StagingProbeSwap(inner: TableSwap) extends TableSwap {
+  @volatile var stagedAtFailure: Option[Set[String]] = None
+  override def publish(tableDir: String, write: String => Unit): Unit =
+    inner.publish(tableDir, { next =>
+      try write(next)
+      catch {
+        case e: Throwable =>
+          import scala.jdk.CollectionConverters._
+          val s = java.nio.file.Files.list(java.nio.file.Paths.get(next))
+          stagedAtFailure =
+            try Some(s.iterator().asScala.map(_.getFileName.toString).toSet)
+            finally s.close()
+          throw e
+      }
+    })
+}
+
 /** The sink half of the CDC pipeline: changelog stream in, maintained
   * latest-state parquet table out, via foreachBatch + idempotent merge. */
 class CdcSinkSpec extends SparkSpec {
@@ -465,5 +485,238 @@ class CdcSinkSpec extends SparkSpec {
       .filter(n => n.contains(".next-") || n.contains(".old-")).toList
     assert(residue.isEmpty, s"leftover swap dirs: $residue")
     assert(CdcSink.readState(spark, dir).count() == 1)
+  }
+
+  // ------------------------------------------------ merge-on-read deltas
+
+  private val order = Seq("ts", "event_id")
+  private val deletes = Some(col("event_type") === "delete")
+
+  /** A base of 1,200 keys: enough bytes that a batch of a few rows lands
+    * as a delta file rather than folding the table. */
+  private def seedBase(dir: String, swap: TableSwap = RenameSwap): Seq[Ev] = {
+    val evs = (1L to 1200L).map(k => Ev(k, k, ts(0), "insert"))
+    CdcSink.applyChangelog(evs.toDF(), dir, "user_id", order, deletes, swap)
+    evs
+  }
+
+  private def deltaCount(dir: String): Int = CdcSink.generation(dir).deltas.size
+
+  private def stateOf(dir: String): Map[Long, Long] =
+    CdcSink.readState(spark, dir)
+      .select("user_id", "event_id").as[(Long, Long)].collect().toMap
+
+  /** The latest row per user over the whole log by (ts, event_id), deleted
+    * users absent: the recompaction every generation must read back as. */
+  private def recompacted(log: Seq[Ev]): Map[Long, Long] =
+    log.groupBy(_.user_id)
+      .map { case (k, evs) => k -> evs.maxBy(e => (e.ts.getTime, e.event_id)) }
+      .collect { case (k, e) if e.event_type != "delete" => k -> e.event_id }
+
+  test("merge-on-read: small batches land as delta files, and readState " +
+      "equals a from-scratch recompaction of the whole log") {
+    val dir = freshDir()
+    val log = scala.collection.mutable.ArrayBuffer[Ev]() ++ seedBase(dir)
+    assert(deltaCount(dir) == 0)
+    val batches = Seq(
+      // two versions of user 1 in one batch: the newer one lands
+      Seq(Ev(2001, 1, ts(1), "update"), Ev(2002, 2, ts(1), "update"),
+        Ev(2003, 1, ts(2), "update")),
+      Seq(Ev(2004, 3, ts(2), "delete"), Ev(2005, 1300, ts(2), "insert")),
+      // same ts as the base row, greater event_id: newer
+      Seq(Ev(2006, 4, ts(0), "update")),
+      // the base row of user 5 again, and an insert older than user 2's
+      // delta row but newer than its base row
+      Seq(Ev(5, 5, ts(0), "insert"), Ev(1000, 2, ts(0), "update")),
+      // older than user 3's delta tombstone: no resurrection
+      Seq(Ev(2007, 3, ts(1), "insert")),
+      // deleted and re-inserted within one batch
+      Seq(Ev(2008, 6, ts(3), "delete"), Ev(2009, 6, ts(4), "insert")))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      CdcSink.applyChangelog(b.toDF(), dir, "user_id", order, deletes)
+      log ++= b
+      assert(deltaCount(dir) == i + 1, s"batch $i did not land as a delta")
+      assert(stateOf(dir) == recompacted(log.toSeq), s"state after batch $i")
+    }
+    // the sink's own whole-table merge of the log in one batch agrees
+    val whole = freshDir()
+    CdcSink.applyChangelog(log.toSeq.toDF(), whole, "user_id", order, deletes)
+    assert(stateOf(whole) == stateOf(dir))
+  }
+
+  test("merge-on-read: the retry/replay/delete matrix holds on delta " +
+      "generations under BOTH publication protocols") {
+    for ((label, impl) <- Seq[(String, TableSwap)](
+        "rename" -> RenameSwap, "transactional" -> TransactionalFakeSwap)) {
+      val dir = freshDir()
+      seedBase(dir, impl)
+      def apply(evs: Ev*): Unit = {
+        val before = deltaCount(dir)
+        CdcSink.applyChangelog(evs.toDF(), dir, "user_id", order, deletes, impl)
+        assert(deltaCount(dir) == before + 1, s"[$label] batch did not land as a delta")
+      }
+      apply(Ev(2010, 1, ts(5), "update"), Ev(2011, 2, ts(6), "update"))
+      val after1 = stateOf(dir)
+      assert(after1.size == 1200 && after1(1L) == 2010L && after1(2L) == 2011L,
+        s"[$label] update not applied")
+
+      // foreachBatch retry: the exact same batch applied again
+      apply(Ev(2010, 1, ts(5), "update"), Ev(2011, 2, ts(6), "update"))
+      assert(stateOf(dir) == after1, s"[$label] retry changed the table")
+
+      // out-of-order replay of an OLDER version must not regress
+      apply(Ev(1500, 1, ts(1), "insert"))
+      assert(stateOf(dir) == after1, s"[$label] older replay regressed user 1")
+
+      // delete tombstones; a replayed older insert cannot resurrect
+      apply(Ev(2012, 1, ts(7), "delete"))
+      assert(stateOf(dir) == after1 - 1L, s"[$label] delete not applied")
+      apply(Ev(1500, 1, ts(1), "insert"))
+      assert(stateOf(dir) == after1 - 1L,
+        s"[$label] replayed old insert resurrected a deleted key")
+      apply(Ev(2012, 1, ts(7), "delete"))
+      assert(stateOf(dir) == after1 - 1L, s"[$label] retried delete changed the table")
+    }
+  }
+
+  test("merge-on-read: a batch folds once the deltas' bytes reach the " +
+      "base's, and lands as a delta again after the fold") {
+    val dir = freshDir()
+    val log = scala.collection.mutable.ArrayBuffer[Ev]() ++ seedBase(dir)
+    var applied = 0
+    var folded = false
+    while (!folded && applied < 200) {
+      val before = CdcSink.generation(dir)
+      val b = Seq(Ev(3000L + applied, 1L + applied, ts(1), "update"))
+      CdcSink.applyChangelog(b.toDF(), dir, "user_id", order, deletes)
+      log ++= b
+      applied += 1
+      val after = CdcSink.generation(dir)
+      if (before.deltaBytes >= before.baseBytes) {
+        assert(after.deltas.isEmpty, s"no fold at ${before.deltaBytes} delta bytes " +
+          s"over ${before.baseBytes} base bytes")
+        folded = true
+      } else {
+        assert(after.deltas.size == before.deltas.size + 1)
+        assert(after.base.map(_.getFileName) == before.base.map(_.getFileName),
+          "a delta batch rewrote the base")
+      }
+    }
+    assert(folded, s"no fold after $applied batches")
+    assert(applied > 1, "the first small batch folded")
+    assert(stateOf(dir) == recompacted(log.toSeq))
+    CdcSink.applyChangelog(Seq(Ev(4000, 7, ts(2), "update")).toDF(),
+      dir, "user_id", order, deletes)
+    assert(deltaCount(dir) == 1)
+  }
+
+  test("merge-on-read: compact and purgeTombstones fold the deltas first, " +
+      "so a delta tombstone over a live base row survives a purge") {
+    val dir = freshDir()
+    seedBase(dir)
+    CdcSink.applyChangelog(Seq(Ev(2020, 7, ts(1), "delete")).toDF(),
+      dir, "user_id", order, deletes)
+    assert(deltaCount(dir) == 1)
+    CdcSink.purgeTombstones(spark, dir)
+    assert(deltaCount(dir) == 0)
+    assert(!stateOf(dir).contains(7L), "purge resurrected a key deleted in a delta")
+    assert(stateOf(dir).size == 1199)
+    // both the tombstone and the base row it shadowed are gone
+    assert(spark.read.parquet(dir).count() == 1199)
+
+    CdcSink.applyChangelog(
+      Seq(Ev(2021, 8, ts(1), "delete"), Ev(2022, 9, ts(1), "update")).toDF(),
+      dir, "user_id", order, deletes)
+    assert(deltaCount(dir) == 1)
+    val before = stateOf(dir)
+    CdcSink.compact(spark, dir)
+    assert(deltaCount(dir) == 0)
+    assert(stateOf(dir) == before)
+    // compaction keeps the tombstone, one row per key
+    assert(spark.read.parquet(dir).count() == 1199)
+    assert(spark.read.parquet(dir).where(col("__tombstone")).count() == 1)
+    // the compacted generation still takes deltas, and its tombstone
+    // still stops an older replay
+    CdcSink.applyChangelog(Seq(Ev(8, 8, ts(0), "insert")).toDF(),
+      dir, "user_id", order, deletes)
+    assert(deltaCount(dir) == 1)
+    assert(stateOf(dir) == before)
+  }
+
+  test("merge-on-read: a batch with an extra column folds the deltas") {
+    val dir = freshDir()
+    seedBase(dir)
+    CdcSink.applyChangelog(Seq(Ev(2030, 1, ts(1), "update")).toDF(),
+      dir, "user_id", order, deletes)
+    assert(deltaCount(dir) == 1)
+    CdcSink.applyChangelog(
+      Seq(Ev(2031, 2, ts(1), "update")).toDF().withColumn("score", lit(5)),
+      dir, "user_id", order, deletes)
+    assert(deltaCount(dir) == 0, "a widened batch landed as a delta")
+    val st = CdcSink.readState(spark, dir)
+    assert(st.columns.contains("score"))
+    val rows = st.select("user_id", "event_id", "score").collect()
+      .map(r => r.getLong(0) ->
+        ((r.getLong(1), if (r.isNullAt(2)) None else Some(r.getInt(2))))).toMap
+    assert(rows.size == 1200)
+    assert(rows(1L) == ((2030L, None)))
+    assert(rows(2L) == ((2031L, Some(5))))
+    assert(rows(3L) == ((3L, None)))
+    // the widened generation takes deltas of its own schema
+    CdcSink.applyChangelog(
+      Seq(Ev(2032, 3, ts(1), "update")).toDF().withColumn("score", lit(6)),
+      dir, "user_id", order, deletes)
+    assert(deltaCount(dir) == 1)
+  }
+
+  test("merge-on-read: a write that fails after linking, before its delta " +
+      "lands, leaves the previous generation intact; the next apply succeeds") {
+    import scala.jdk.CollectionConverters._
+    val dir = freshDir()
+    def listing(): Set[String] = {
+      val s = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    try {
+      seedBase(dir)
+      CdcSink.applyChangelog(Seq(Ev(2040, 1, ts(1), "update")).toDF(),
+        dir, "user_id", order, deletes)
+      assert(deltaCount(dir) == 1)
+      val before = stateOf(dir)
+      val filesBefore = listing()
+
+      // the batch's rows throw when the delta write evaluates them
+      val boom = udf { (s: String) =>
+        if (s == "boom") throw new IllegalStateException("injected delta failure")
+        s
+      }
+      val failing = Seq(Ev(2041, 2, ts(1), "boom")).toDF()
+        .withColumn("event_type", boom(col("event_type")))
+      val probe = new StagingProbeSwap(RenameSwap)
+      intercept[Exception] {
+        CdcSink.applyChangelog(failing, dir, "user_id", order, deletes, probe)
+      }
+      val staged = probe.stagedAtFailure.getOrElse(fail("the write did not fail"))
+      assert(filesBefore.filterNot(_.startsWith("_")).subsetOf(staged),
+        s"the failure struck before linking: $staged")
+      assert(!staged.contains("delta-00001.parquet"),
+        s"the failure struck after the delta landed: $staged")
+
+      assert(listing() == filesBefore)
+      assert(stateOf(dir) == before)
+      CdcSink.applyChangelog(Seq(Ev(2042, 2, ts(1), "update")).toDF(),
+        dir, "user_id", order, deletes)
+      assert(deltaCount(dir) == 2)
+      assert(stateOf(dir) == before + (2L -> 2042L))
+    } finally {
+      // the failed write's orphan staging directory
+      val parent = java.nio.file.Paths.get(dir).getParent
+      val name = java.nio.file.Paths.get(dir).getFileName.toString
+      val s = java.nio.file.Files.list(parent)
+      try s.iterator().asScala.toList
+        .filter(_.getFileName.toString.startsWith(name + ".next-"))
+        .foreach(RenameSwap.deleteRecursively)
+      finally s.close()
+    }
   }
 }
